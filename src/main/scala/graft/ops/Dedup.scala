@@ -2,12 +2,14 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 import graft.functions.{StableHash, Text, Vectors}
 
 /** Deduplication operators for LLM-training-data pipelines (north-star
   * extensions, BASELINE.json). All are single-pass, shuffle-on-key designs:
   * the only shuffles are the groupBy on the (small) digest/bucket keys, so
-  * they scale linearly with input and never collect to the driver.
+  * they scale linearly with input and never collect to the driver (save
+  * [[Dedup.clusterNearDups]]' edge sets under the broadcast threshold).
   */
 object Dedup {
 
@@ -710,9 +712,32 @@ object Dedup {
     * representative) — the standard final step of fuzzy dedup: pick one
     * survivor per duplicate cluster.
     *
-    * Algorithm: alternating large-star / small-star contractions on the
-    * EDGE set (public algorithm: Kiveris et al., "Connected Components in
-    * MapReduce and Beyond", SoCC 2014), which converges in O(log n)
+    * Two labelling paths share one edge pin. The pinned canonical edge set
+    * (child > parent, no self-loops, no duplicates) is counted by an
+    * observe() metric riding the pin's own action — no extra job — and the
+    * count picks the path:
+    *
+    *  - '''Driver union-find''' when the id type is integral and
+    *    count × 16 bytes ≤ `spark.sql.autoBroadcastJoinThreshold` (Spark's
+    *    own "small enough to ship through the driver" rule; −1 disables
+    *    it, so no new knob): the edges are collected as primitive long
+    *    arrays (16 bytes per edge on the wire; at peak about 72 bytes per
+    *    edge of driver heap — endpoints, their sorted copy, the parent
+    *    array and the output arrays — so ~300 MB at `Graft.tune`'s 64 MB)
+    *    and labelled by a sort plus union-find with the minimum id as each
+    *    set's root, at about 1-2 µs of one driver core per edge (JDK 17,
+    *    random graphs: 4M edges in 6.8 s). A graph of a few hundred edges
+    *    costs one collect job
+    *    instead of ≥ 2 contraction rounds of ~10 stage jobs each. Only
+    *    integral ids take it: other types order by Spark's collation-aware
+    *    comparison, which the driver must not re-implement.
+    *  - '''Alternating star contraction''' otherwise — the distributed path,
+    *    and the one a 100 TB corpus takes (its edge set is far past any
+    *    broadcast threshold).
+    *
+    * Star contraction: alternating large-star / small-star contractions on
+    * the EDGE set (public algorithm: Kiveris et al., "Connected Components
+    * in MapReduce and Beyond", SoCC 2014), which converges in O(log n)
     * practical rounds REGARDLESS of how ids are laid out along the graph
     * — measured 7-10 rounds for permuted 250-5000-node chains, exactly
     * the shape sorted-neighborhood candidates produce. (The naive
@@ -726,18 +751,103 @@ object Dedup {
     * is truncated by an eager localCheckpoint per round so iteration N
     * plans O(1) work. Convergence is detected from a multiset signature
     * (count + bit_xor of stable row hashes) read off the checkpointed
-    * round — no extra pass, no driver-side set compare.
+    * round — no extra pass, no driver-side set compare. `maxIters` bounds
+    * this loop only; the driver path is exact in one pass.
     */
   def clusterNearDups(ids: DataFrame, pairs: DataFrame,
       idCol: String = "id", maxIters: Int = 50): DataFrame = {
     // Canonical child>parent orientation; self-loops and duplicates out.
-    var edges = pairs
+    val edgeObs = org.apache.spark.sql.Observation()
+    val edges = pairs
       .select(col("id_a"), col("id_b")).where(col("id_a") =!= col("id_b"))
       .select(greatest(col("id_a"), col("id_b")).as("a"),
         least(col("id_a"), col("id_b")).as("b"))
       .distinct()
+      .observe(edgeObs, count(lit(1)).as("n"))
       .localCheckpoint(true)
+    // AQE can prune the CollectMetrics node of an empty edge set; the
+    // empty map then means 0 edges (and the collect below checks it).
+    val nEdges = org.apache.spark.sql.graftbridge.GraftBridge
+      .observationOrEmpty(edgeObs).getOrElse("n", 0L).asInstanceOf[Long]
+    val threshold =
+      ids.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val stars = edges.schema("a").dataType match {
+      case ByteType | ShortType | IntegerType | LongType
+          if threshold >= 0 && nEdges * 16 <= threshold =>
+        labelOnDriver(edges, nEdges)
+      case _ => starContraction(edges, maxIters)
+    }
+    // Stars map each non-root member to its component min; isolated ids
+    // label themselves.
+    ids.select(col(idCol).as("id"))
+      .join(stars, Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+  }
 
+  /** Driver-side labelling of a pinned integral edge set (a, b):
+    * union-find over the sorted distinct endpoints, each set rooted at its
+    * minimum id. Returns (id, component) for the non-root members only, as
+    * a local relation of the edges' id type. Refuses — never returns a
+    * partial labelling — if the rows received differ from `nEdges`, the
+    * count observed on the pin.
+    */
+  private def labelOnDriver(edges: DataFrame, nEdges: Long): DataFrame = {
+    val idType = edges.schema("a").dataType
+    // One primitive (a0, b0, a1, b1, ...) array per partition.
+    val parts = edges.select(col("a").cast("long"), col("b").cast("long"))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+        rows.foreach { r => buf += r.getLong(0); buf += r.getLong(1) }
+        Iterator.single(buf.result())
+      }
+      .collect()
+    val received = parts.map(_.length.toLong).sum / 2
+    if (received != nEdges)
+      throw new IllegalStateException(
+        s"clusterNearDups collected $received edges but the pin observed " +
+          s"$nEdges; refusing to return a partial labelling.")
+    val nodes = Array.concat(parts.toIndexedSeq: _*)
+    java.util.Arrays.sort(nodes)
+    var k = 0
+    for (i <- nodes.indices)
+      if (i == 0 || nodes(i) != nodes(i - 1)) { nodes(k) = nodes(i); k += 1 }
+    // Sorted nodes: the smaller index is the smaller id, so rooting each
+    // union at the smaller index keeps every root its set's minimum.
+    val parent = Array.tabulate(k)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    def idx(v: Long): Int = java.util.Arrays.binarySearch(nodes, 0, k, v)
+    for (p <- parts; j <- 0 until p.length by 2) {
+      val ra = find(idx(p(j)))
+      val rb = find(idx(p(j + 1)))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    // Point every node at its root, then emit the non-roots.
+    var n = 0
+    for (i <- 0 until k) { parent(i) = find(i); if (parent(i) != i) n += 1 }
+    val members = new Array[Long](n)
+    val roots = new Array[Long](n)
+    n = 0
+    for (i <- 0 until k if parent(i) != i) {
+      members(n) = nodes(i); roots(n) = nodes(parent(i)); n += 1
+    }
+    val spark = edges.sparkSession
+    import spark.implicits._
+    Seq((members, roots)).toDF("id", "component")
+      .select(inline(arrays_zip(col("id"), col("component"))))
+      .select(col("id").cast(idType), col("component").cast(idType))
+  }
+
+  /** Alternating large-star / small-star contraction of a pinned edge set
+    * to its star fixed point; returns (id, component) for every non-root
+    * member. See [[clusterNearDups]].
+    */
+  private def starContraction(pinned: DataFrame, maxIters: Int): DataFrame = {
+    var edges = pinned
     // Multiset signature for the convergence test: the edge set is stable
     // iff (count, xor of row hashes) repeats — no full set compare needed.
     // r14: the signature rides the round's checkpoint materialization as
@@ -796,12 +906,8 @@ object Dedup {
         s"clusterNearDups did not reach the star fixed point in $maxIters " +
           "rounds; the labeling below would be silently incorrect. " +
           "Alternating-star converges in O(log n) rounds — raise maxIters.")
-    // Converged edges are stars (child -> component min); isolated ids
-    // label themselves.
-    val stars = edges.groupBy(col("a").as("id")).agg(min(col("b")).as("component"))
-    ids.select(col(idCol).as("id"))
-      .join(stars, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+    // Converged edges are stars (child -> component min).
+    edges.groupBy(col("a").as("id")).agg(min(col("b")).as("component"))
   }
 
   /** Sorted-neighborhood candidate pairs (the classic SNM family:

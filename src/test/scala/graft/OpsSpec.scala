@@ -1136,16 +1136,125 @@ class OpsSpec extends SparkSpec {
   }
 
   test("clusterNearDups: 14-round chain converges with a bounded plan") {
-    // A 15-node chain has diameter 14: min-label propagation needs many
-    // rounds, which used to nest one join deeper into the logical plan per
-    // round. localCheckpoint every few rounds bounds the plan.
+    // A 15-node chain has diameter 14: each contraction round plans its
+    // joins over the previous round's edges, so uncut lineage would nest
+    // deeper per round. The eager localCheckpoint after every round bounds
+    // the plan. Threshold -1 keeps the graph on the star loop.
     val ids = (0L to 14L).toDF("id")
     val pairs = (0L until 14L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val out = Dedup.clusterNearDups(ids, pairs, maxIters = 20)
-    assert(out.collect().forall(_.getLong(1) == 0L)) // one component, min id 0
-    // Lineage was truncated: the final plan must not nest ~14 joins.
-    val planDepth = out.queryExecution.optimizedPlan.collect { case p => p }.size
-    assert(planDepth < 30, s"plan has $planDepth nodes - lineage not truncated")
+    onStarLoop {
+      val out = Dedup.clusterNearDups(ids, pairs, maxIters = 20)
+      assert(out.collect().forall(_.getLong(1) == 0L)) // one component, min id 0
+      // Lineage was truncated: the final plan must not nest ~14 joins.
+      val planDepth = out.queryExecution.optimizedPlan.collect { case p => p }.size
+      assert(planDepth < 30, s"plan has $planDepth nodes - lineage not truncated")
+    }
+  }
+
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` at -1, which
+    * keeps [[Dedup.clusterNearDups]] off its driver union-find path. */
+  private def onStarLoop[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, prev)
+  }
+
+  private def permutedChain(n: Long): org.apache.spark.sql.DataFrame = {
+    val perm = new scala.util.Random(7).shuffle((0L until n).toVector)
+    perm.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("id_a", "id_b")
+  }
+
+  test("clusterNearDups: driver union-find labels equal the star loop's") {
+    def labels(ids: org.apache.spark.sql.DataFrame,
+        pairs: org.apache.spark.sql.DataFrame) = {
+      val out = Dedup.clusterNearDups(ids, pairs, maxIters = 20)
+      (out.schema, out.collect().map(r => r.get(0) -> r.get(1)).toMap)
+    }
+    def parity(ids: org.apache.spark.sql.DataFrame,
+        pairs: org.apache.spark.sql.DataFrame): Map[Any, Any] = {
+      val (driverSchema, driver) = labels(ids, pairs)
+      val (loopSchema, loop) = onStarLoop(labels(ids, pairs))
+      assert(driverSchema == loopSchema)
+      assert(driver == loop)
+      driver
+    }
+    // the 8-node components, the 15-chain, the permuted 400-chain
+    assert(parity((1L to 8L).toDF("id"),
+      Seq((1L, 2L), (2L, 3L), (4L, 5L), (7L, 8L)).toDF("id_a", "id_b")) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L,
+        7L -> 7L, 8L -> 7L))
+    assert(parity((0L to 14L).toDF("id"),
+      (0L until 14L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+      .values.toSet == Set(0L))
+    assert(parity((0L until 400L).toDF("id"), permutedChain(400))
+      .values.toSet == Set(0L))
+    // Int ids keep their type on both paths
+    assert(parity(Seq(5, 3, 9, 1, 7).toDF("id"),
+      Seq((9, 3), (3, 5), (7, 7)).toDF("id_a", "id_b")) ==
+      Map(5 -> 3, 3 -> 3, 9 -> 3, 1 -> 1, 7 -> 7))
+    // String ids: the minimum follows Spark's string order
+    assert(parity(Seq("n10", "n9", "n2", "x").toDF("id"),
+      Seq(("n9", "n10"), ("n2", "n9")).toDF("id_a", "id_b")) ==
+      Map("n10" -> "n10", "n9" -> "n10", "n2" -> "n10", "x" -> "x"))
+    // no pairs: every id labels itself
+    assert(parity((1L to 3L).toDF("id"),
+      Seq.empty[(Long, Long)].toDF("id_a", "id_b")) ==
+      Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
+  }
+
+  test("clusterNearDups: integral ids under the threshold skip the star loop; strings keep it") {
+    // maxIters = 1 cuts the loop off before an 8-chain's fixed point, so
+    // it throws exactly when the loop runs.
+    val chain = (0L until 7L).map(i => (i, i + 1))
+    val driver = Dedup.clusterNearDups((0L to 7L).toDF("id"),
+      chain.toDF("id_a", "id_b"), maxIters = 1).collect()
+    assert(driver.forall(_.getLong(1) == 0L))
+    intercept[IllegalStateException] {
+      Dedup.clusterNearDups((0L to 7L).map(i => s"n$i").toDF("id"),
+        chain.map { case (a, b) => (s"n$a", s"n$b") }.toDF("id_a", "id_b"),
+        maxIters = 1)
+    }
+  }
+
+  test("fuzzyDedup: a small near-dup graph runs fewer Spark jobs than the star loop") {
+    // Guards the driver path from a refactor that brings the contraction
+    // rounds back for small graphs. The loop's >= 2 rounds of ~10 stage
+    // jobs each more than double this fixture's job count (14 vs 36 on
+    // Spark 4.1); a plain `<` would not catch them, since threshold -1
+    // also trades broadcast joins for sort-merge joins, which alone adds
+    // a couple of shuffle jobs.
+    val sc = spark.sparkContext
+    def jobs(body: => Unit): Int = {
+      val group = s"graft-job-count-${System.nanoTime()}"
+      val n = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (js.properties != null &&
+              js.properties.getProperty("spark.jobGroup.id") == group)
+            n.incrementAndGet(): Unit
+      }
+      sc.addSparkListener(l)
+      sc.setJobGroup(group, "clusterNearDups job count")
+      try body
+      finally {
+        sc.clearJobGroup()
+        Thread.sleep(1000) // async listener settle
+        sc.removeSparkListener(l)
+      }
+      n.get()
+    }
+    def run(): Unit = {
+      val kept = Dedup.fuzzyDedup(docs, "text", "doc_id",
+        numHashes = 16, bands = 8, shingleK = 3, threshold = 0.5)
+        .select("doc_id").as[Long].collect().sorted
+      assert(kept.toSeq == Seq(1L, 4L, 5L))
+    }
+    val driver = jobs(run())
+    val loop = jobs(onStarLoop(run()))
+    info(s"fuzzyDedup jobs: driver path $driver, star loop $loop")
+    assert(2 * driver <= loop, s"driver path ran $driver jobs, star loop $loop")
   }
 
   test("groupK selection is identical under any partitioning") {
@@ -1265,11 +1374,12 @@ class OpsSpec extends SparkSpec {
   test("clusterNearDups refuses to mislabel when maxIters cuts off convergence") {
     // An 8-node chain needs >1 alternating-star round; with maxIters = 1
     // the old code fell through to the final groupBy/min and returned
-    // silently wrong labels. Now it must throw.
+    // silently wrong labels. Now it must throw. Threshold -1 keeps the
+    // graph on the star loop (the driver path has no rounds to cut off).
     val ids = (0L to 7L).toDF("id")
     val pairs = (0L until 7L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException] {
-      Dedup.clusterNearDups(ids, pairs, maxIters = 1).collect()
+      onStarLoop(Dedup.clusterNearDups(ids, pairs, maxIters = 1).collect())
     }
     assert(e.getMessage.contains("maxIters") || e.getMessage.contains("rounds"))
   }
@@ -1824,13 +1934,12 @@ class OpsSpec extends SparkSpec {
   test("clusterNearDups collapses a permuted 400-chain in bounded rounds") {
     // ids scattered along the chain: the O(diameter) label-propagation
     // worst case; alternating-star must converge well inside maxIters
-    val rnd = new scala.util.Random(7)
-    val perm = rnd.shuffle((0L until 400L).toVector)
-    val pairs = perm.sliding(2).map(p => (p(0), p(1))).toSeq
-      .toDF("id_a", "id_b")
     val ids = (0L until 400L).toDF("id")
-    val comp = graft.ops.Dedup.clusterNearDups(ids, pairs, "id", maxIters = 15)
-    val labels = comp.select("component").distinct().collect().map(_.getLong(0))
+    val labels = onStarLoop {
+      val comp = graft.ops.Dedup.clusterNearDups(ids, permutedChain(400),
+        "id", maxIters = 15)
+      comp.select("component").distinct().collect().map(_.getLong(0))
+    }
     assert(labels.toSeq == Seq(0L)) // one chain, one component, min label
   }
 
