@@ -99,6 +99,9 @@ object Bench {
     "sketch_kmv_distinct" -> 0.1139,
     "ts_sessionize" -> 0.0232)
 
+  /** The smallest scale, where every plan shape warms before timing. */
+  private[graft] val warmDir = "/root/testdata/sf0.001"
+
   /** Floors are wall-clock constants recorded on the build box; any other
     * host would breach floor x 1.5 on every workload, burn the retries
     * and permanently report window=noisy. GRAFT_BENCH_FLOORS degrades the
@@ -185,7 +188,7 @@ object Bench {
         // corpus entry: every dim is a base scan with a real size estimate
         // so each join statically broadcasts; the pre-collapsed
         // customer->nation->region chain had no join-output size estimate
-        // and forced a fact-side SortMergeJoin exchange. OptProbe r14:
+        // and forced a fact-side SortMergeJoin exchange. OPTIMIZATION_r14.md §1:
         // 0.2288 -> 0.1901 s/inst (83%).
         val li = replicate(
           t("lineitem").select("l_orderkey", "l_extendedprice", "l_discount"), r)
@@ -270,7 +273,8 @@ object Bench {
         // stream (r14, same restructure as Dedup.duplicatedPassages —
         // its scaladoc has the sf0.1/sf1/sf10 probe evidence): the
         // corpus tokenizes once and the count/probe join disappears.
-        // OptProbe r14 fused r=4 sf0.1: 0.5401 -> 0.4032 s/inst (75%).
+        // OPTIMIZATION_r14.md §3, fused r=4 sf0.1: 0.5401 -> 0.4032 s/inst
+        // (75%).
         val marked = windows
           .withColumn("__occ",
             count(lit(1)).over(Window.partitionBy("__rep", "g")))
@@ -385,7 +389,7 @@ object Bench {
         // Pre-dedup (rep, event_type, user_id) first (r14, guide §2.3,
         // same restructure as the corpus entry): KMV buffers and md5 run
         // once per DISTINCT user, the mixed distinct+object-agg plan
-        // becomes a plain two-level aggregate. OptProbe r14: 0.1445 ->
+        // becomes a plain two-level aggregate. OPTIMIZATION_r14.md §2: 0.1445 ->
         // 0.1213 s/inst (84%).
         val du = replicate(t("events").select("event_type", "user_id"), r)
           .where(col("user_id").isNotNull)
@@ -502,7 +506,6 @@ object Bench {
     // too, untimed — the pandas twins' factory step.
     val phaseT0 = System.nanoTime()
     def phaseSecs(since: Long): Double = (System.nanoTime() - since) / 1e9
-    val warmDir = "/root/testdata/sf0.001"
     bm25Ix(spark, warmDir); ivfCents(spark, warmDir)
     bm25Ix(spark, sfDir); ivfCents(spark, sfDir)
     headline.foreach { case (name, r) =>

@@ -92,8 +92,8 @@ object SparkEntry
   /** 2-dp double -> exact integer cents. Equally exact as the decimal cast
     * (round lands on the true integer; Spark's double->long cast truncates,
     * hence round first) but plans ~2x faster: decimal precision coercion
-    * dominates analysis time on aggregate-heavy plans (see tools.Profile
-    * freshplan A/B: 0.85s decimal vs 0.45s cents for the q1 shape).
+    * dominates analysis time on aggregate-heavy plans (a fresh-plan A/B
+    * of the q1 shape, recorded only here: 0.85s decimal vs 0.45s cents).
     * Used in the HEADLINE bench queries; colder queries keep the decimal
     * form for variety of coverage.
     */

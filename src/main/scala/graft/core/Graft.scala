@@ -33,11 +33,11 @@ object Graft {
     // vanilla reader; read as long and convert with [[nanosToTimestamp]].
     c.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // Spark 4's default ICU case mapping is kept AS-IS: the r14
-    // interleaved A/B (tools/IcuProbe — flag flipped between fresh-plan
-    // fused passes in one session) measured icu=off at 101%/105% of
-    // icu=on for text_profile/dedup_minhash, i.e. no real win — the
-    // CollationAwareUTF8String path keeps the isFullAscii fast path, so
-    // only non-ASCII docs ever reach ICU. The native whitespace_tokens
+    // interleaved A/B (OPTIMIZATION_r14.md §9 — flag flipped between
+    // fresh-plan fused passes in one session) measured icu=off at
+    // 101%/105% of icu=on for text_profile/dedup_minhash, i.e. no real
+    // win — the CollationAwareUTF8String path keeps the isFullAscii fast
+    // path, so only non-ASCII docs ever reach ICU. The native whitespace_tokens
     // expression captures this flag at plan time exactly like Lower, so
     // native and declarative lowering stay bit-identical under either
     // setting.

@@ -271,27 +271,11 @@ object Text {
 
   /** Token-parameterized variant (see [[languageIdFromTokens]]).
     *
-    * Stays on the DECLARATIVE fold: the native one-pass
-    * [[graft.plans.TokenFingerprint]] expression (kept below,
-    * bit-parity-tested) measures 12% FASTER in an isolated A/B
-    * (OptProbe profile_declfp: declarative = 112% of native) but
-    * text_profile runs 30-45% SLOWER with it inside the full resident
-    * bench session, reproducibly (six full-bench runs 0.178-0.212
-    * s/inst native vs 0.143 declarative in the controlled bisect run,
-    * r13 reference 0.135-0.154) — the fused profile's generated code
-    * with the extra native call pattern degrades under the bench
-    * session's JIT/GC state in a way short probe sessions never see.
-    * The corpus runs in exactly that kind of long resident session, so
-    * the session-context number wins. Revisit only with a full-bench
-    * matched pair, not an isolated probe.
+    * A declarative fold, not a native expression: a native one-pass form
+    * ran text_profile 30-45% slower in the resident bench session
+    * (OPTIMIZATION_r14.md §4).
     */
-  def fingerprintFromTokens(toks: Column): Column =
-    fingerprintFromTokensDeclarative(toks)
-
-  /** The declarative fingerprint fold; [[graft.plans.TokenFingerprint]]
-    * is fuzz-compared against this in FunctionsSpec.
-    */
-  def fingerprintFromTokensDeclarative(toks: Column): Column = {
+  def fingerprintFromTokens(toks: Column): Column = {
     val positioned = zip_with(
       toks,
       sequence(lit(1), greatest(size(toks), lit(1))),

@@ -1042,8 +1042,9 @@ object Dedup {
     * memory). Here the sort key is the 8-byte hash on a 24-byte row
     * (long-radix, cheap to spill), and the r14 probe shows clean scaling:
     * sf1 full-op 3.4-5.5 s vs window 2.6-4.1 s; sf10 62-79 s vs 31-75 s
-    * (PassagesProbe, interleaved pairs) — the window form is parity cold
-    * and ~2x faster warm, with identical output at every scale. The
+    * (OPTIMIZATION_r14.md §3, interleaved pairs) — the window form is
+    * parity cold and ~2x faster warm, with identical output at every
+    * scale. The
     * r13 form avoided the sort with an aggregate + hinted shuffle-hash
     * semi join, but paid for it with a SECOND full tokenize+zip_with+
     * hash pass over the corpus (each DataFrame reference replans the
@@ -1052,11 +1053,11 @@ object Dedup {
     * before the consumers does NOT fix that, as the r14 before-plans
     * show) plus a second stream-sized exchange. One tokenize pass is
     * ~1/3 of the query, so folding count+probe into one window on the
-    * single shuffled stream wins (OptProbe fused r=4 sf0.1: 0.40 vs
-    * 0.54 s/inst). Skew exposure is unchanged from the semi-join form:
-    * its probe side also shuffled the raw stream on g, so a boilerplate
-    * gram concentrates on one task either way, and maxGramDf bounds what
-    * survives into the island merge.
+    * single shuffled stream wins (OPTIMIZATION_r14.md §3, fused r=4
+    * sf0.1: 0.40 vs 0.54 s/inst). Skew exposure is unchanged from the
+    * semi-join form: its probe side also shuffled the raw stream on g, so
+    * a boilerplate gram concentrates on one task either way, and
+    * maxGramDf bounds what survives into the island merge.
     * hash60 collisions merge two grams' counts (a pair of singleton grams
     * colliding would falsely mark both) with probability ~ n_grams^2 /
     * 2^61 — ~1e-4 at 1e7 distinct grams; acceptable for a dedup MARKER,

@@ -609,7 +609,7 @@ object Similarity {
     * nearest cell, query rows to their `nProbe` nearest — both as
     * `(g, id, embedding)` frames ready for [[groupKernelJoin]].
     */
-  private[graft] def ivfSides(corpus: DataFrame, queries: DataFrame,
+  private def ivfSides(corpus: DataFrame, queries: DataFrame,
       cents: DataFrame, nProbe: Int): (DataFrame, DataFrame) = {
     val carr = centroidArray(cents) // shared: ONE broadcast build for both sides
     val cB = nearestCellsWith(

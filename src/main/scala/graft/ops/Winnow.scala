@@ -102,7 +102,7 @@ object Winnow {
     * interpreted lambdas and zero per-pair array-slice copies — the
     * whole expansion runs in whole-stage codegen. Measured ~78% of the
     * list form at sf0.1 and its passes are the most stable of the three
-    * shapes probed (CorpusOptProbe winnow_list / winnow_explode; a
+    * shapes probed (OPTIMIZATION_r14.md §15; a
     * checkpoint-pinned self-join variant tied at sf0.1/sf1 locally but
     * needs a corpus-fingerprint-sized checkpoint + broadcast at scale,
     * so the linear form ships). Parity exact at sf0.1.

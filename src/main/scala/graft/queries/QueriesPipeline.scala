@@ -388,7 +388,7 @@ private[graft] trait QueriesPipeline { this: SparkEntry.type =>
       // partial combine collapses repeat visitors before the wire — and
       // the KMV insert + md5 run once per DISTINCT user; n_exact is a
       // plain count of the deduped rows (== countDistinct by
-      // construction). Measured (OptProbe r14, fused r=8, sf0.1):
+      // construction). Measured (OPTIMIZATION_r14.md §2, fused r=8, sf0.1):
       // 0.1445 -> 0.1213 s/inst (84%). Output byte-identical (KMV keeps
       // the k smallest DISTINCT hashes — duplicate insertion was already
       // a no-op; the estimator and kept set cannot move).

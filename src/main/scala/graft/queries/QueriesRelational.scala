@@ -190,7 +190,7 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
       // the collapsed dim small, and the fact->cdim join fell back to a
       // SortMergeJoin that exchanged the whole fact side by o_custkey
       // (plans/r14/j1_multiway_join_before.txt, operators 23-25).
-      // Measured (OptProbe r14, fused r=8, sf0.1): 0.2288 -> 0.1901
+      // Measured (OPTIMIZATION_r14.md §1, fused r=8, sf0.1): 0.2288 -> 0.1901
       // s/inst (83%); after-plan has ZERO SortMergeJoins.
       // No broadcast() hints: at 100 TB AQE picks shuffle joins instead
       // of a forced OOM.

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf-agnostic self-verification for [[graft.ops.Dedup.clusterNearDups]]
@@ -47,14 +46,7 @@ import org.apache.spark.sql.functions._
 object ClosureParityProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = Probe.session()
 
     val docs = graft.core.Graft.table(spark, dir, "documents")
     // The closure trio's exact inputs (QueriesDedup: SNM pairs over

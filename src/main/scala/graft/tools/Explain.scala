@@ -1,15 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump formatted plans for the named queries (plan audit). */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.session()
     // "exec:<name>" materializes the query first and prints the FINAL
     // adaptive plan (AQE exchange reuse only appears at runtime stage
     // creation — the static formatted plan shows duplicated subtrees

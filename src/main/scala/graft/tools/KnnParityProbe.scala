@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf-agnostic parity check for [[graft.ops.Similarity.knnJoin]] at
@@ -16,17 +15,10 @@ import org.apache.spark.sql.functions._
 object KnnParityProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val k = args.headOption.map(_.toInt).getOrElse(3)
+    val k = 3
     val nBlocks = 16
     val sampleEvery = 97 // deterministic ~1% query sample
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.core.Graft.tune(spark)
+    val spark = Probe.session()
     val emb = graft.core.Graft.table(spark, dir, "embeddings")
     val t0 = System.nanoTime()
     val joined = graft.ops.Similarity.knnJoin(emb, emb, k, nBlocks)

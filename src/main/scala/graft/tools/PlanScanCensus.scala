@@ -1,9 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.core.Graft
-
 /** Dev-only: census of duplicated-subtree pressure across the whole
   * corpus — for every query, count `Scan parquet` and `Generate` nodes
   * in the STATIC physical plan (AQE stage reuse may dedup some at
@@ -11,19 +7,14 @@ import graft.core.Graft
   * and reuse only fires when subtrees canonicalize identically — the
   * r14 text_pmi_pairs lesson is that they often do not). Queries whose
   * static plan scans the same table many times are restructure
-  * candidates. Usage: runMain graft.tools.PlanScanCensus [minScans]
+  * candidates. Prints the queries with 3 or more scans. Usage:
+  * SPARK_GRAFT_SF_DIR=<dir> runMain graft.tools.PlanScanCensus
   */
 object PlanScanCensus {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val minScans = args.headOption.map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Graft.tune(spark)
+    val minScans = 3
+    val spark = Probe.session()
     val rows = graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, b) =>
         try {

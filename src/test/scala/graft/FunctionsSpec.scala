@@ -187,34 +187,6 @@ class FunctionsSpec extends SparkSpec {
     assert(fp.forall(_ >= 0L))
   }
 
-  test("native TokenFingerprint is bit-parity with the declarative fold") {
-    // The declarative quirks must survive verbatim: null ARRAY -> null,
-    // EMPTY array -> 0, null ELEMENT poisons the fold -> null (hash60 is
-    // null-intolerant and the size-0 guard only rescues the empty case),
-    // "" tokens hash like any string, positions are 1-based.
-    val planted: Seq[Seq[Option[String]]] = Seq(
-      null, Seq.empty,
-      Seq(Some("a")), Seq(Some("a"), None, Some("b")), Seq(None),
-      Seq(Some("the"), Some("the"), Some("the")),
-      Seq(Some(""), Some("x"), Some("")), Seq(Some("汉字"), Some("é")))
-    val rnd = new scala.util.Random(41)
-    val pool = Seq("the", "a", "of", "und", "汉", "é", "", "tok", "Zq")
-    val fuzz: Seq[Seq[Option[String]]] = (0 until 300).map { _ =>
-      Seq.fill(rnd.nextInt(24))(
-        if (rnd.nextInt(12) == 0) None else Some(pool(rnd.nextInt(pool.length))))
-    }
-    val df = (planted ++ fuzz).toDF("toks")
-    // The native expression is compared directly: the production default
-    // is the declarative fold (see fingerprintFromTokens' scaladoc — the
-    // native form loses in the resident bench session), but the parity
-    // contract keeps the alternative swappable.
-    val got = df.select(graft.plans.TokenFingerprint($"toks")).collect()
-      .map(r => if (r.isNullAt(0)) null else r.getLong(0))
-    val want = df.select(Text.fingerprintFromTokensDeclarative($"toks")).collect()
-      .map(r => if (r.isNullAt(0)) null else r.getLong(0))
-    assert(got.toSeq == want.toSeq)
-  }
-
   test("native RepetitionProfile is bit-parity with the declarative fold") {
     // Fuzz docs: repeated lines, blank lines, tab-led lines, repeated
     // bigrams, single tokens, empty and null text. Both forms run over

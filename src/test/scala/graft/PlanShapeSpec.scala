@@ -438,7 +438,7 @@ class PlanShapeSpec extends SparkSpec {
     // and the occ-in-[2,cap] filter is count(*) OVER (PARTITION BY g)
     // on the one shuffled stream — no join exists at all. The window
     // sort here is over the 8-byte hash (long radix, clean sf10
-    // scaling per PassagesProbe); the guard keeps out BOTH superlinear
+    // scaling per OPTIMIZATION_r14.md §3); the guard keeps out BOTH superlinear
     // regressions: a windowspecdefinition on the k-token STRING gram
     // (the r10 33x-at-sf10 plan) and a SortMergeJoin of the raw stream.
     val p = finalPlan("dedup_passages")

@@ -1,0 +1,56 @@
+package graft
+
+import graft.tools.Probe
+
+/** The dev timing harness at the smoke scale, one pass: its shuffle count
+  * walks the final adaptive plan, its parity check compares only targets
+  * that share a schema, and a bad target name fails before any job.
+  */
+class ProbeSpec extends SparkSpec {
+
+  private def measure(targets: String*): Probe.Report =
+    Probe.measure(spark, Bench.warmDir, Bench.warmDir, targets, passes = 1)
+
+  test("shuffle count: 0 for a map-only query, > 0 for q1_agg") {
+    // o2_topk is a scan under TakeOrderedAndProject, whose top-k merge
+    // runs inside the operator: no exchange node in the plan
+    val r = measure("o2_topk", "q1_agg")
+    val byName = r.results.map(x => x.target -> x).toMap
+    assert(byName("o2_topk").shuffles == 0)
+    assert(byName("q1_agg").shuffles > 0)
+    assert(r.results.forall(x => x.passes.size == 1 && x.passes.head.wallS > 0))
+    assert(r.parity == "not comparable")
+  }
+
+  test("a target against itself reports parity ok") {
+    val r = measure("q1_agg", "q1_agg")
+    assert(r.parity == "ok")
+    assert(r.pairs == Seq(("q1_agg", "q1_agg", true)))
+  }
+
+  test("a query and its fused form are not comparable (__rep column)") {
+    val r = measure("q1_agg", "fused:q1_agg")
+    assert(r.parity == "not comparable")
+    assert(r.results.map(_.instances) ==
+      Seq(1, Bench.headline.toMap.apply("q1_agg")))
+  }
+
+  test("an unknown target fails with the named error and runs no Spark job") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val e = intercept[Probe.UnknownTarget](
+        measure("q1_agg", "fused:no_such_query"))
+      assert(e.getMessage.contains("fused:no_such_query"))
+      intercept[Probe.UnknownTarget](measure("no_such_query"))
+      Thread.sleep(500) // listener events arrive asynchronously
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() == 0)
+  }
+}
