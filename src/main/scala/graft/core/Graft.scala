@@ -104,4 +104,24 @@ object Graft {
     if (alreadySpread || df.inputFiles.length >= target) df
     else df.repartition(target)
   }
+
+  /** Gather a small DataFrame into one partition (the dual of [[spread]])
+    * so the aggregates and sorts above it need no exchange: a
+    * `SinglePartition` child satisfies every clustered, all-tuples and
+    * ordered distribution, so the query plans no shuffle, no range-sample
+    * job and no AQE stage boundary, and runs as one Spark job. For a small
+    * interactive read that fixed per-stage dispatch, not the data, is the
+    * cost.
+    *
+    * The bound is Spark's own `spark.sql.files.openCostInBytes` (4 MB by
+    * default): a file source that small is already scanned as one split
+    * per file, so gathering it gives up no scan parallelism. Larger and
+    * streaming inputs are returned unchanged and keep the distributed
+    * plan. Like [[spread]] the decision reads only logical statistics,
+    * never `df.rdd.getNumPartitions`.
+    */
+  def gather(df: DataFrame): DataFrame =
+    if (!df.isStreaming && df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+        df.sparkSession.sessionState.conf.filesOpenCostInBytes) df.coalesce(1)
+    else df
 }

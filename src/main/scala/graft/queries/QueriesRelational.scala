@@ -170,9 +170,8 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
       .orderBy("c_custkey")),
 
     // F6 distinct non-null values (metrics_dashboard.py:20).
-    "f6_distinct" -> ((s, d) => t(s, d, "customer")
-      .select("c_mktsegment").na.drop().distinct()
-      .orderBy("c_mktsegment")),
+    "f6_distinct" -> ((s, d) =>
+      graft.service.MetricsService.options(t(s, d, "customer"), "c_mktsegment")),
 
     // J1 multi-way inner equi-join + agg; dims broadcast (SURVEY §2.3).
     "j1_multiway_join" -> ((s, d) => {

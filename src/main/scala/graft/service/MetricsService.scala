@@ -4,9 +4,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
+import graft.core.Graft
+
 /** The interactive query surface (reference dashboards, SURVEY.md §3.3):
   * catalog ops, previews, numeric means, cascading filters, grouped means,
   * pivots. The parity target is the QUERIES, not the UI.
+  *
+  * The aggregating reads (`options`, `numericMeans`, `groupedMean`,
+  * `pivotSum`) first [[Graft.gather]] their input: at or under
+  * `spark.sql.files.openCostInBytes` (4 MB by default) it is one
+  * partition, so the aggregate and the sort plan no exchange and a read
+  * runs as one Spark job instead of one per exchange plus the range-sample
+  * job of `orderBy`. Dispatch, not data, is what a small dashboard read
+  * costs. A larger input keeps the distributed plan unchanged.
   */
 object MetricsService {
 
@@ -28,14 +38,14 @@ object MetricsService {
       .filter(_.dataType.isInstanceOf[NumericType]).map(_.name)
     require(numCols.nonEmpty, "no numeric columns")
     val aggs = numCols.map(c => avg(col(c)).as(s"avg_$c"))
-    df.agg(aggs.head, aggs.tail: _*)
+    Graft.gather(df).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Distinct non-null values of a column, sorted
     * (metrics_dashboard.py:20-23 cascade options).
     */
   def options(df: DataFrame, column: String): DataFrame =
-    df.select(column).na.drop().distinct().orderBy(column)
+    Graft.gather(df).select(column).na.drop().distinct().orderBy(column)
 
   /** Cascading filter (metrics_dashboard.py:25):
     * STATE equality + PROVNUM in-list.
@@ -45,7 +55,7 @@ object MetricsService {
 
   /** Grouped mean of a metric (metrics_dashboard.py:28-31, 43-46). */
   def groupedMean(df: DataFrame, groupCol: String, metricCol: String): DataFrame =
-    df.groupBy(groupCol)
+    Graft.gather(df).groupBy(groupCol)
       .agg(avg(metricCol).as(s"avg_$metricCol"))
       .orderBy(groupCol)
 
@@ -56,7 +66,7 @@ object MetricsService {
     */
   def pivotSum(df: DataFrame, indexCol: String, pivotCol: String,
       valueCol: String, pivotValues: Seq[String] = Nil): DataFrame = {
-    val g = df.groupBy(indexCol)
+    val g = Graft.gather(df).groupBy(indexCol)
     val p = if (pivotValues.nonEmpty) g.pivot(pivotCol, pivotValues) else g.pivot(pivotCol)
     p.sum(valueCol).orderBy(indexCol)
   }

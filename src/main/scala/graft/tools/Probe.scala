@@ -1,10 +1,13 @@
 package graft.tools
 
 import java.lang.management.ManagementFactory
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.graftbridge.GraftBridge
 
 import graft.core.Graft
 
@@ -23,7 +26,12 @@ import graft.core.Graft
   * (A B, then B A, …) and every pass builds a fresh plan and runs Bench's
   * action, `queryExecution.toRdd.count()`. `build_s` is the builder call,
   * eager-pin jobs included; `plan_s` is `executedPlan`; `cpu_s` is the
-  * process CPU delta, which in local mode covers the executors.
+  * process CPU delta, which in local mode covers the executors. A listener
+  * counts the Spark jobs of each pass (not divided by the instance count):
+  * `build_jobs` ran inside the builder call (parquet schema reads, eager
+  * pins), `jobs` ran from planning to the end of the action (one per AQE
+  * stage, sampling jobs included), so `jobs` is what the query's plan
+  * costs in dispatch.
   *
   * Usage (the dir is required): SPARK_GRAFT_SF_DIR=<dir> [SPARK_GRAFT_CPUS=<n>]
   * [GRAFT_PROBE_PASSES=<n>, default 3] runMain graft.tools.Probe <target...>
@@ -35,9 +43,11 @@ object Probe {
     s"unknown probe target: $name (want a SparkEntry query or " +
       "fused:<Bench.headline name>)")
 
-  /** One timed pass in seconds, per instance for fused targets. */
+  /** One timed pass in seconds, per instance for fused targets, and the
+    * Spark jobs its build and its run started.
+    */
   final case class Pass(buildS: Double, planS: Double, execS: Double,
-      wallS: Double, cpuS: Double) {
+      wallS: Double, cpuS: Double, buildJobs: Int, jobs: Int) {
     def fields: Seq[(String, Double)] = Seq("build_s" -> buildS,
       "plan_s" -> planS, "exec_s" -> execS, "wall_s" -> wallS, "cpu_s" -> cpuS)
   }
@@ -51,6 +61,9 @@ object Probe {
       val s = xs.sorted
       (s((s.size - 1) / 2) + s(s.size / 2)) / 2
     }
+    private def lowerMedian(xs: Seq[Int]): Int = xs.sorted.apply((xs.size - 1) / 2)
+    def buildJobs: Int = lowerMedian(passes.map(_.buildJobs))
+    def jobs: Int = lowerMedian(passes.map(_.jobs))
   }
 
   /** `parity` is "ok", "mismatch", or "not comparable" when no two targets
@@ -97,19 +110,43 @@ object Probe {
   private val os = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-  private def timed(spark: SparkSession, dir: String,
-      t: Target): (Pass, DataFrame) = {
+  /** The local property that tags a pass's jobs with its phase. */
+  private val Phase = "graft.probe.phase"
+
+  /** Counts job starts per phase; read only after
+    * `GraftBridge.drainListeners`, since listener events arrive
+    * asynchronously.
+    */
+  private final class JobCounter extends SparkListener {
+    val build, run = new AtomicInteger(0)
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      Option(e.properties).map(_.getProperty(Phase)) match {
+        case Some("build") => build.incrementAndGet(): Unit
+        case Some("run") => run.incrementAndGet(): Unit
+        case _ =>
+      }
+  }
+
+  private def timed(spark: SparkSession, dir: String, t: Target,
+      counter: JobCounter): (Pass, DataFrame) = {
+    val sc = spark.sparkContext
+    GraftBridge.drainListeners(sc)
+    counter.build.set(0)
+    counter.run.set(0)
+    sc.setLocalProperty(Phase, "build")
     val c0 = os.getProcessCpuTime
     val t0 = System.nanoTime()
-    val df = t.build(spark, dir)
+    val df = try t.build(spark, dir) finally sc.setLocalProperty(Phase, "run")
     val t1 = System.nanoTime()
     df.queryExecution.executedPlan
     val t2 = System.nanoTime()
-    df.queryExecution.toRdd.count()
+    try df.queryExecution.toRdd.count() finally sc.setLocalProperty(Phase, null)
     val t3 = System.nanoTime()
     val cpu = os.getProcessCpuTime - c0
+    GraftBridge.drainListeners(sc)
     def s(ns: Long): Double = ns / 1e9 / t.instances
-    (Pass(s(t1 - t0), s(t2 - t1), s(t3 - t2), s(t3 - t0), s(cpu)), df)
+    (Pass(s(t1 - t0), s(t2 - t1), s(t3 - t2), s(t3 - t0), s(cpu),
+      counter.build.get, counter.run.get), df)
   }
 
   def measure(spark: SparkSession, dir: String, warmDir: String,
@@ -118,10 +155,12 @@ object Probe {
     val ts = targets.map(resolve)
     ts.foreach(_.build(spark, warmDir).queryExecution.toRdd.count())
     val load = os.getSystemLoadAverage
-    val runs = (0 until passes).flatMap { i =>
+    val counter = new JobCounter
+    spark.sparkContext.addSparkListener(counter)
+    val runs = try (0 until passes).flatMap { i =>
       val order = ts.indices.drop(i % ts.size) ++ ts.indices.take(i % ts.size)
-      order.map(j => j -> timed(spark, dir, ts(j)))
-    }
+      order.map(j => j -> timed(spark, dir, ts(j), counter))
+    } finally spark.sparkContext.removeSparkListener(counter)
     val byTarget = ts.indices.map(j => runs.filter(_._1 == j).map(_._2))
     val lastDf = byTarget.map(_.last._2)
     val results = ts.indices.map(j => Result(ts(j).name, ts(j).instances,
@@ -140,8 +179,9 @@ object Probe {
     Report(dir, load, results, parity, pairs)
   }
 
-  private def json(kv: Seq[(String, Double)]): String =
-    kv.map { case (k, v) => f""""$k":$v%.4f""" }.mkString("{", ",", "}")
+  private def json(kv: Seq[(String, Double)], counts: (String, Int)*): String =
+    (kv.map { case (k, v) => f""""$k":$v%.4f""" } ++
+      counts.map { case (k, n) => s""""$k":$n""" }).mkString("{", ",", "}")
 
   private def quote(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
@@ -159,16 +199,18 @@ object Probe {
         f"${mn("wall_s")}%.4f med ${med("wall_s")}%.4f s | median " +
         f"build ${med("build_s")}%.4f plan ${med("plan_s")}%.4f " +
         f"exec ${med("exec_s")}%.4f cpu ${med("cpu_s")}%.4f s | " +
-        f"shuffles ${r.shuffles}")
+        f"shuffles ${r.shuffles} | jobs ${r.jobs} build_jobs ${r.buildJobs}")
     }
     println(s"[probe] parity=${report.parity}" + report.pairs.map {
       case (a, b, ok) => s" $a=$b:${if (ok) "ok" else "MISMATCH"}"
     }.mkString)
     val targets = report.results.map { r =>
       s"""{"target":${quote(r.target)},"instances":${r.instances},""" +
-        s""""shuffles":${r.shuffles},"min":${json(r.min)},""" +
-        s""""median":${json(r.median)},"passes":""" +
-        r.passes.map(p => json(p.fields)).mkString("[", ",", "]") + "}"
+        s""""shuffles":${r.shuffles},"jobs":${r.jobs},""" +
+        s""""build_jobs":${r.buildJobs},"min":${json(r.min)},""" +
+        s""""median":${json(r.median)},"passes":""" + r.passes.map(p =>
+          json(p.fields, "jobs" -> p.jobs, "build_jobs" -> p.buildJobs))
+          .mkString("[", ",", "]") + "}"
     }
     val pairs = report.pairs.map { case (a, b, ok) =>
       s"""{"a":${quote(a)},"b":${quote(b)},"ok":$ok}"""

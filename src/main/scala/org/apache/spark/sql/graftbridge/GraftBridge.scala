@@ -21,6 +21,13 @@ object GraftBridge {
     */
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
 
+  /** Block until every listener event posted so far has been delivered
+    * (`listenerBus` is `private[spark]`), so a listener's counts cover
+    * every job that has already returned.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Non-blocking read of an [[org.apache.spark.sql.Observation]]
     * (`getOrEmpty` minus its `private[sql]` wait): empty map until the
     * first action on the observed frame completes. AQE's empty-relation

@@ -3,8 +3,9 @@ package graft
 import graft.tools.Probe
 
 /** The dev timing harness at the smoke scale, one pass: its shuffle count
-  * walks the final adaptive plan, its parity check compares only targets
-  * that share a schema, and a bad target name fails before any job.
+  * walks the final adaptive plan, its job count covers the pass, its
+  * parity check compares only targets that share a schema, and a bad
+  * target name fails before any job.
   */
 class ProbeSpec extends SparkSpec {
 
@@ -20,6 +21,15 @@ class ProbeSpec extends SparkSpec {
     assert(byName("q1_agg").shuffles > 0)
     assert(r.results.forall(x => x.passes.size == 1 && x.passes.head.wallS > 0))
     assert(r.parity == "not comparable")
+  }
+
+  test("job count: 1 for f6_distinct (a gathered read), > 1 for q1_agg") {
+    val byName = measure("f6_distinct", "q1_agg").results
+      .map(x => x.target -> x).toMap
+    assert(byName("f6_distinct").passes.map(_.jobs) == Seq(1))
+    assert(byName("q1_agg").jobs > 1)
+    // the builder's own job: spark.read.parquet infers the schema with one
+    assert(byName("f6_distinct").buildJobs == 1)
   }
 
   test("a target against itself reports parity ok") {

@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import graft.core.Graft
 import graft.service.MetricsService
 
 /** Dashboard query surface (M4) + table/CSV sinks (K1/K2/K5). */
@@ -50,6 +55,89 @@ class ServiceAndSinksSpec extends SparkSpec {
   test("numericMeans averages every numeric column (null-skipping)") {
     val out = MetricsService.numericMeans(metrics).collect().head
     assert(out.getDouble(out.fieldIndex("avg_total_nurse_hours")) == 187.5)
+  }
+
+  /** Spark jobs `body` runs, counted in its own job group. */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-service-jobs-${System.nanoTime()}"
+    val n = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null &&
+            js.properties.getProperty("spark.jobGroup.id") == group)
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "service job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      GraftBridge.drainListeners(sc)
+      sc.removeSparkListener(l)
+    }
+    n.get()
+  }
+
+  /** Runs `body` with the gather bound lowered to `bytes`, then restores it. */
+  private def withOpenCost[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.openCostInBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The four aggregating reads, each over the given input. */
+  private val reads: Seq[(String, DataFrame => DataFrame)] = Seq(
+    "options" -> (MetricsService.options(_, "STATE")),
+    "groupedMean" -> (df => MetricsService.groupedMean(
+      MetricsService.filterFacilities(df, "TX", Seq("P1", "P2")),
+      "PROVNUM", "nurse_to_patient_ratio")),
+    "pivotSum" -> (MetricsService.pivotSum(_, "CY_Qtr", "PROVNUM",
+      "total_nurse_hours", Seq("P1", "P2", "P3"))),
+    "numericMeans" -> MetricsService.numericMeans)
+
+  /** Same rows in the same order; doubles to 1e-9 relative (partial sums
+    * merge in a different order on a different partitioning).
+    */
+  private def assertClose(a: Seq[Row], b: Seq[Row], what: String): Unit = {
+    assert(a.size == b.size, what)
+    a.zip(b).foreach { case (x, y) =>
+      assert(x.length == y.length, what)
+      x.toSeq.zip(y.toSeq).foreach {
+        case (u: Double, v: Double) =>
+          assert(math.abs(u - v) <= 1e-9 * math.max(math.abs(u), math.abs(v)),
+            s"$what: $x vs $y")
+        case (u, v) => assert(u == v, s"$what: $x vs $y")
+      }
+    }
+  }
+
+  test("a read of an input under openCostInBytes runs one job; over it, the distributed plan") {
+    reads.foreach { case (name, read) =>
+      var small, large = Seq.empty[Row]
+      assert(jobs { small = read(metrics).collect().toSeq } == 1, name)
+      val distributed = withOpenCost(1) {
+        assert(Graft.gather(metrics) eq metrics)
+        jobs { large = read(metrics).collect().toSeq }
+      }
+      assert(distributed > 1, name)
+      assertClose(small, large, name)
+    }
+  }
+
+  test("a 3-partition input gathers to the distributed path's rows (1e-9 relative)") {
+    val spread = metrics.repartition(3)
+    reads.foreach { case (name, read) =>
+      val gathered = read(spread).collect().toSeq
+      val distributed = withOpenCost(1)(read(spread).collect().toSeq)
+      assertClose(gathered, distributed, name)
+    }
+  }
+
+  test("gather returns a streaming frame unchanged") {
+    val stream = spark.readStream.format("rate").load()
+    assert(Graft.gather(stream) eq stream)
   }
 
   test("preview limits rows (O2)") {
