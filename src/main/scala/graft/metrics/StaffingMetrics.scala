@@ -1,7 +1,8 @@
 package graft.metrics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
 import graft.functions.{Cleaning, Norm}
 
 /** The staffing-metrics pipeline (reference calculate_metrics.py): discover
@@ -23,42 +24,62 @@ object StaffingMetrics {
 
   val criticalCols = Seq("MDScensus", "Hrs_RN", "Hrs_LPN", "Hrs_CNA")
 
+  /** `observe()` counters on `frame`: build on [[on]], and the counters
+    * fill in on the first action over it at no extra job. A read first
+    * delivers the listener events already posted, so it sees an action that
+    * has returned; before any action it throws, and it never waits for one.
+    * When AQE prunes the node (a stage above it came out empty), Spark
+    * reports no value, and the read recounts over `frame` with one job.
+    * Shared by [[JoinAudit]] and [[DropAudit]].
+    */
+  private[metrics] final class Counters(frame: DataFrame, metrics: Column*) {
+    private val o = Observation()
+    val on: DataFrame = frame.observe(o, metrics.head, metrics.tail: _*)
+    private lazy val recount = frame.agg(metrics.head, metrics.tail: _*).head()
+    def apply(name: String): Long = {
+      GraftBridge.drainListeners(frame.sparkSession.sparkContext)
+      if (!o.future.isCompleted) throw new IllegalStateException(
+        "the audit counters fill in on the first action over the audited " +
+          "frame: run one (write/collect/count) before reading them")
+      GraftBridge.observationOrEmpty(o).getOrElse(name, recount.getAs[Long](name))
+        .asInstanceOf[Long]
+    }
+  }
+
   /** Join audit. `steps` is eager. `emptyAfterStep` (the reference's
     * `empty_merges`) is populated by the FIRST action on the joined frame:
     * the per-step row counts ride that job as `observe()` metrics, so the
-    * audit costs zero extra jobs (the former shape was an eager `isEmpty`
-    * per step — an extra action re-evaluating the join prefix, O(N^2) over
-    * N frames). Reading it before any action throws (never blocks).
+    * audit costs zero extra jobs. Reading it before any action throws.
     */
-  final class JoinAudit(val steps: Int,
-      obs: Seq[(Int, org.apache.spark.sql.Observation)]) {
-    def emptyAfterStep: Seq[Int] = obs.flatMap { case (i, o) =>
-      val m = org.apache.spark.sql.graftbridge.GraftBridge.observationOrEmpty(o)
-      if (m.isEmpty) throw new IllegalStateException(
-        "foldJoin audit is populated by the first action on the joined " +
-          "frame — run one (count/collect/write) before reading it")
-      if (m("rows").asInstanceOf[Long] == 0L) Some(i) else None
-    }
+  final class JoinAudit private[metrics] (val steps: Int, rows: Seq[(Int, Counters)]) {
+    def emptyAfterStep: Seq[Int] = rows.collect { case (i, c) if c("rows") == 0L => i }
   }
 
   /** Row-drop accounting, mirroring the reference's per-stage warnings
     * (calculate_metrics.py:93-97 zero-sentinel count, :100-113 critical
     * dropna count, :134-140 zero-denominator count, :145-153 ratio dropna
-    * count). Populated by [[cleanWithAudit]] / [[metricsWithAudit]].
+    * count). Like [[JoinAudit]], the counters are `observe()` metrics on the
+    * published frame's own chain and cost no extra job. Two conditions hold:
+    *  - they are exact after the first full action on the published frame
+    *    (a write, `collect`, `count` or `localCheckpoint`); reading them
+    *    before any action throws;
+    *  - a `limit`/`head` first action can stop the post-aggregate scan
+    *    early, so it can leave `zeroDenomRows` and `droppedRatioRows`
+    *    partial.
     */
-  final case class DropAudit(
-      zeroNulledRows: Long,       // rows whose critical set was zero-nulled
-      droppedCriticalRows: Long,  // rows dropped for missing critical values
-      zeroDenomRows: Long,        // aggregated rows with a zeroed denominator
-      droppedRatioRows: Long)     // aggregated rows dropped for NULL ratios
+  final class DropAudit private[metrics] (zeroed: Counters, critical: Counters,
+      ratios: Counters) {
+    def zeroNulledRows: Long = zeroed("n")          // rows whose critical set was zero-nulled
+    def droppedCriticalRows: Long = critical("n")   // rows dropped for missing critical values
+    def zeroDenomRows: Long = ratios("zero_denom")  // aggregated rows with a zeroed denominator
+    def droppedRatioRows: Long = ratios("dropped")  // aggregated rows dropped for NULL ratios
+  }
 
   /** Iterative N-way inner equi-join on (PROVNUM, CY_Qtr)
     * (reference calculate_metrics.py:56-62). Overlapping non-key columns are
     * deterministically renamed `<col>_fN` by source position — the Spark
     * replacement for pandas' `_x`/`_y` suffixing (SURVEY.md §7.4.1).
-    * Empty intermediate joins are recorded (the reference's `empty_merges`).
-    */
-  /** `audit = true` reproduces the reference's per-step empty-merge check
+    * `audit = true` reproduces the reference's per-step empty-merge check
     * (calculate_metrics.py:57-62) as free-riding `observe()` counters: one
     * `CollectMetrics` per step inside the single lazy plan, read back from
     * [[JoinAudit.emptyAfterStep]] after the caller's first action. Scale-
@@ -68,19 +89,19 @@ object StaffingMetrics {
       audit: Boolean = true): (DataFrame, JoinAudit) = {
     require(frames.nonEmpty, "no qualifying input frames") // :51-54
     var merged = frames.head
-    var obs = List.empty[(Int, org.apache.spark.sql.Observation)]
+    var rows = List.empty[(Int, Counters)]
     frames.zipWithIndex.drop(1).foreach { case (f, i) =>
       val clash = merged.columns.toSet
         .intersect(f.columns.toSet) -- keys
       val renamed = clash.foldLeft(f)((d, c) => d.withColumnRenamed(c, s"${c}_f$i"))
       merged = merged.join(renamed, keys, "inner")
       if (audit) { // :57-62 empty-merge audit
-        val o = org.apache.spark.sql.Observation(s"foldjoin_step_$i")
-        merged = merged.observe(o, count(lit(1)).as("rows"))
-        obs ::= (i, o)
+        val c = new Counters(merged, count(lit(1)).as("rows"))
+        merged = c.on
+        rows ::= (i, c)
       }
     }
-    (merged, new JoinAudit(frames.size - 1, obs.reverse))
+    (merged, new JoinAudit(frames.size - 1, rows.reverse))
   }
 
   /** Post-merge contract check (reference calculate_metrics.py:64-67). */
@@ -92,7 +113,9 @@ object StaffingMetrics {
 
   /** Cleaning (reference calculate_metrics.py:71-114): quarter
     * normalization, numeric coercion, row-wise zero-sentinel nulling of the
-    * critical set, then drop rows with any critical NULL.
+    * critical set, then drop rows with any critical NULL. The two cleaning
+    * counters of [[DropAudit]] are observed just before the nulling and
+    * just before the drop.
     *
     * The drop set is the reference's dropna subset (critical cols + STATE +
     * CY_Qtr, calculate_metrics.py:101-108) PLUS PROVNUM: the reference
@@ -103,73 +126,29 @@ object StaffingMetrics {
     */
   private val dropSubset = criticalCols ++ Seq("STATE", "CY_Qtr", "PROVNUM")
 
-  def clean(df: DataFrame): DataFrame = {
+  private def clean(df: DataFrame): (DataFrame, Counters, Counters) = {
     val numericCols = requiredCols.filterNot(Seq("PROVNUM", "STATE", "CY_Qtr").contains)
     val coerced = numericCols.foldLeft(
       df.withColumn("CY_Qtr", Norm.normalizeQuarter(col("CY_Qtr")))  // :74
     )((d, c) => d.withColumn(c, Cleaning.coerceNumeric(col(c))))     // :88-90
-    val zeroed = Cleaning.zeroSentinelNull(coerced, criticalCols)    // :92-98
-    zeroed.na.drop(dropSubset)                                       // :101-108
-  }
-
-  /** [[clean]] plus the reference's eager row-drop accounting
-    * (calculate_metrics.py:93-97, :100-113). Costs two count actions over
-    * the pre-drop frame — the reference is eager too; pass through
-    * [[clean]] directly when counts aren't needed at scale.
-    */
-  def cleanWithAudit(df: DataFrame): (DataFrame, Long, Long) = {
-    val numericCols = requiredCols.filterNot(Seq("PROVNUM", "STATE", "CY_Qtr").contains)
-    val coerced = numericCols.foldLeft(
-      df.withColumn("CY_Qtr", Norm.normalizeQuarter(col("CY_Qtr")))
-    )((d, c) => d.withColumn(c, Cleaning.coerceNumeric(col(c))))
-    // one pass computes all three counts (no per-stage re-execution)
     val anyZero = criticalCols.map(col(_) === 0).reduce(_ || _)
-    val zeroed = Cleaning.zeroSentinelNull(coerced, criticalCols)
+    val nZeroed = new Counters(coerced, count(when(anyZero, 1)).as("n"))
+    val zeroed = Cleaning.zeroSentinelNull(nZeroed.on, criticalCols) // :92-98
     val anyNull = dropSubset.map(col(_).isNull).reduce(_ || _)
-    val counts = coerced.select(
-      count(lit(1)).as("n"),
-      count(when(anyZero, 1)).as("n_zeroed"))
-      .crossJoin(zeroed.select(count(when(anyNull, 1)).as("n_dropped")))
-      .head()
-    (zeroed.na.drop(dropSubset),
-      counts.getAs[Long]("n_zeroed"), counts.getAs[Long]("n_dropped"))
+    val nDropped = new Counters(zeroed, count(when(anyNull, 1)).as("n"))
+    (nDropped.on.na.drop(dropSubset), nZeroed, nDropped)             // :101-108
   }
 
   /** Aggregation + ratios (reference calculate_metrics.py:117-162):
     * horizontal hour sums, group totals, denominator zero->NULL, ratio
     * columns, drop NULL-ratio rows, final projection.
+    *
+    * `zero_denom` counts rows whose census OR employed denominator is NULL
+    * post-zeroing; the reference counts rows where either WAS zero
+    * (calculate_metrics.py:132-135) — identical unless a denominator was
+    * already NULL, impossible here (sum over the cleaned, null-dropped set).
     */
-  def metrics(df: DataFrame): DataFrame =
-    ratioed(df)
-      .na.drop(Seq("nurse_to_patient_ratio", "contract_vs_employed_ratio")) // :145-148
-      .select("PROVNUM", "STATE", "CY_Qtr",                           // :155-162
-        "nurse_to_patient_ratio", "contract_vs_employed_ratio", "total_nurse_hours")
-
-  /** [[metrics]] plus the reference's eager row-drop accounting
-    * (calculate_metrics.py:132-140 zero denominators, :145-153 ratio
-    * drops). One count action over the aggregated (small) frame.
-    */
-  def metricsWithAudit(df: DataFrame): (DataFrame, Long, Long) = {
-    val r = ratioed(df).cache()
-    val c = r.select(
-      count(when(col("total_census").isNull || col("total_employed").isNull, 1))
-        .as("n_zero_denom"),
-      count(when(col("nurse_to_patient_ratio").isNull ||
-        col("contract_vs_employed_ratio").isNull, 1)).as("n_dropped"))
-      .head()
-    val out = r
-      .na.drop(Seq("nurse_to_patient_ratio", "contract_vs_employed_ratio"))
-      .select("PROVNUM", "STATE", "CY_Qtr",
-        "nurse_to_patient_ratio", "contract_vs_employed_ratio", "total_nurse_hours")
-    (out, c.getAs[Long]("n_zero_denom"), c.getAs[Long]("n_dropped"))
-  }
-
-  // Note: n_zero_denom counts rows whose census OR employed denominator is
-  // NULL post-zeroing; the reference counts rows where either WAS zero
-  // (calculate_metrics.py:132-135) — identical unless a denominator was
-  // already NULL, impossible here (sum over the cleaned, null-dropped set).
-
-  private def ratioed(df: DataFrame): DataFrame = {
+  private def metrics(df: DataFrame): (DataFrame, Counters) = {
     val withSums = df
       .withColumn("total_hours", Cleaning.horizontalSum(
         Seq(col("Hrs_RN"), col("Hrs_LPN"), col("Hrs_CNA"))))          // :119
@@ -182,33 +161,36 @@ object StaffingMetrics {
       sum("MDScensus").as("total_census"),
       sum("total_hours_ctr").as("total_contract"),
       sum("total_hours_emp").as("total_employed"))
-    agg
+    val ratioed = agg
       .withColumn("total_census", Cleaning.zeroToNull(col("total_census")))     // :132-140
       .withColumn("total_employed", Cleaning.zeroToNull(col("total_employed")))
       .withColumn("nurse_to_patient_ratio",
         col("total_nurse_hours") / col("total_census"))               // :142
       .withColumn("contract_vs_employed_ratio",
         col("total_contract") / col("total_employed"))                // :143
+    val nRatio = new Counters(ratioed,
+      count(when(col("total_census").isNull || col("total_employed").isNull, 1))
+        .as("zero_denom"),
+      count(when(col("nurse_to_patient_ratio").isNull ||
+        col("contract_vs_employed_ratio").isNull, 1)).as("dropped"))
+    (nRatio.on
+      .na.drop(Seq("nurse_to_patient_ratio", "contract_vs_employed_ratio")) // :145-148
+      .select("PROVNUM", "STATE", "CY_Qtr",                           // :155-162
+        "nurse_to_patient_ratio", "contract_vs_employed_ratio", "total_nurse_hours"),
+      nRatio)
   }
 
   /** Full pipeline over pre-loaded frames (discovery/schema-predicate F1 is
     * the caller's: keep frames whose columns ⊇ join keys,
-    * calculate_metrics.py:48-49).
-    */
-  def run(frames: Seq[DataFrame]): (DataFrame, JoinAudit) = {
-    val qualifying = frames.filter(f => joinKeys.forall(f.columns.contains))
-    val (merged, audit) = foldJoin(qualifying)
-    (metrics(clean(requireCols(merged))), audit)
-  }
-
-  /** [[run]] with full accounting: join audit + the reference's four
-    * row-drop counters (clean + metrics stages).
+    * calculate_metrics.py:48-49), with the join audit and the reference's
+    * four row-drop counters. Building the frame runs no Spark job: both
+    * audits fill in on the caller's first action over it.
     */
   def runWithAudit(frames: Seq[DataFrame]): (DataFrame, JoinAudit, DropAudit) = {
     val qualifying = frames.filter(f => joinKeys.forall(f.columns.contains))
     val (merged, joinAudit) = foldJoin(qualifying)
-    val (cleaned, nZeroed, nDroppedCritical) = cleanWithAudit(requireCols(merged))
-    val (out, nZeroDenom, nDroppedRatio) = metricsWithAudit(cleaned)
-    (out, joinAudit, DropAudit(nZeroed, nDroppedCritical, nZeroDenom, nDroppedRatio))
+    val (cleaned, nZeroed, nDropped) = clean(requireCols(merged))
+    val (out, nRatio) = metrics(cleaned)
+    (out, joinAudit, new DropAudit(nZeroed, nDropped, nRatio))
   }
 }

@@ -1,7 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import graft.metrics.StaffingMetrics
+import graft.metrics.StaffingMetrics.{DropAudit, JoinAudit}
 
 /** Typed row for the published metrics (calculate_metrics.py:155-162). */
 final case class MetricsRow(
@@ -19,7 +21,10 @@ final case class MetricsRow(
   */
 object MetricsPipeline {
 
-  def run(spark: SparkSession, csvDir: String): Dataset[MetricsRow] = {
+  /** The published metrics with their join and drop audits. All three are
+    * lazy: the audits fill in on the first action over the Dataset.
+    */
+  def run(spark: SparkSession, csvDir: String): (Dataset[MetricsRow], JoinAudit, DropAudit) = {
     import spark.implicits._
     graft.core.Graft.tune(spark)
     val files = Option(new java.io.File(csvDir).listFiles()).getOrElse(Array.empty)
@@ -28,18 +33,7 @@ object MetricsPipeline {
     val frames = files.toSeq.map(f => spark.read
       .option("header", "true").csv(f.getAbsolutePath))
     val (metrics, audit, drops) = StaffingMetrics.runWithAudit(frames)
-    audit.emptyAfterStep.foreach(i =>
-      System.err.println(s"[metrics] warning: empty merge at step $i")) // :167-169
-    // the reference's per-stage drop warnings (calculate_metrics.py:93-153)
-    if (drops.zeroNulledRows > 0) System.err.println(
-      s"[metrics] warning: zero-nulled critical columns on ${drops.zeroNulledRows} rows")
-    if (drops.droppedCriticalRows > 0) System.err.println(
-      s"[metrics] warning: dropped ${drops.droppedCriticalRows} rows for missing critical values")
-    if (drops.zeroDenomRows > 0) System.err.println(
-      s"[metrics] warning: zeroed denominators on ${drops.zeroDenomRows} aggregated rows")
-    if (drops.droppedRatioRows > 0) System.err.println(
-      s"[metrics] warning: dropped ${drops.droppedRatioRows} aggregated rows for null ratios")
-    metrics.as[MetricsRow]
+    (metrics.as[MetricsRow], audit, drops)
   }
 
   def main(args: Array[String]): Unit = {
@@ -51,10 +45,24 @@ object MetricsPipeline {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val out = run(spark, csvDir)
-    // K5 publish (calculate_metrics.py:172)
-    out.coalesce(1).write.mode("overwrite").option("header", "true").csv(outDir)
-    println(s"[metrics] wrote ${out.count()} rows to $outDir")
+    val (out, audit, drops) = run(spark, csvDir)
+    // K5 publish (calculate_metrics.py:172); the row count rides the write
+    val written = Observation()
+    out.observe(written, count(lit(1)).as("rows"))
+      .coalesce(1).write.mode("overwrite").option("header", "true").csv(outDir)
+    // the audits fill in on the write: the reference's empty-merge
+    // (calculate_metrics.py:167-169) and per-stage drop warnings (:93-153)
+    audit.emptyAfterStep.foreach(i =>
+      System.err.println(s"[metrics] warning: empty merge at step $i"))
+    if (drops.zeroNulledRows > 0) System.err.println(
+      s"[metrics] warning: zero-nulled critical columns on ${drops.zeroNulledRows} rows")
+    if (drops.droppedCriticalRows > 0) System.err.println(
+      s"[metrics] warning: dropped ${drops.droppedCriticalRows} rows for missing critical values")
+    if (drops.zeroDenomRows > 0) System.err.println(
+      s"[metrics] warning: zeroed denominators on ${drops.zeroDenomRows} aggregated rows")
+    if (drops.droppedRatioRows > 0) System.err.println(
+      s"[metrics] warning: dropped ${drops.droppedRatioRows} aggregated rows for null ratios")
+    println(s"[metrics] wrote ${written.get("rows")} rows to $outDir")
     spark.stop()
   }
 }

@@ -53,23 +53,32 @@ object DataQuality {
 
   /** Natural-key duplicate audit (reference build.py:39-53): key groups with
     * count > 1; status ok/warn; a bounded JSON sample of offending keys.
-    * Returns (auditRow, duplicateGroups).
+    * Returns (auditRow, duplicateGroups), both lazy: building them runs no
+    * Spark job, and one action on the audit row computes all of it. The
+    * group count and the sample (the first `sampleN` groups in key order,
+    * each row as its `toJSON` string) read the same group-by, so AQE
+    * reuses its exchange.
     */
   def duplicateAudit(spark: SparkSession, df: DataFrame, tableName: String,
       naturalKey: Seq[String], sampleN: Int = 5): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val dups = df.groupBy(naturalKey.map(col): _*)
+    val keys = naturalKey.map(col)
+    val dups = df.groupBy(keys: _*)
       .agg(count(lit(1)).as("n"))
-      .where($"n" > 1)
-    // bounded, deterministic sample — never a full collect
-    val sample = dups.orderBy(naturalKey.map(col): _*).limit(sampleN)
-      .toJSON.collect().mkString("[", ",", "]")
-    val dupCount = dups.count()
-    val audit = Seq(
-      (tableName, naturalKey.mkString(","), dupCount,
-        if (dupCount > 0) "warn" else "ok", sample)
-    ).toDF("table_name", "natural_key", "duplicate_groups", "status", "sample_json")
-      .withColumn("created_at", current_timestamp()) // build.py:23
+      .where(col("n") > 1)
+    // bounded, deterministic sample — never a full collect. collect_list
+    // keeps no order, so each row's JSON rides with its keys and sort_array
+    // (ascending, nulls first, as orderBy) puts the list back in key order.
+    val json = to_json(struct(dups.columns.toSeq.map(col): _*)).as("__json")
+    val sample = dups.orderBy(keys: _*).limit(sampleN)
+      .agg(sort_array(collect_list(struct(keys :+ json: _*))).as("s"))
+    val audit = dups.agg(count(lit(1)).as("duplicate_groups")).crossJoin(sample)
+      .select(
+        lit(tableName).as("table_name"),
+        lit(naturalKey.mkString(",")).as("natural_key"),
+        col("duplicate_groups"),
+        when(col("duplicate_groups") > 0, "warn").otherwise("ok").as("status"),
+        concat(lit("["), array_join(col("s.__json"), ","), lit("]")).as("sample_json"),
+        current_timestamp().as("created_at")) // build.py:23
     (audit, dups)
   }
 

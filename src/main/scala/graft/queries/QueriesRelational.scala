@@ -392,11 +392,9 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
       s.sql(topnPerGroupSql)
     }),
 
-    // A4 duplicate-key audit agg (build.py:39-53).
-    "a4_dup_audit" -> ((s, d) => t(s, d, "events")
-      .groupBy("user_id", "event_type")
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") > 1)
+    // A4 duplicate-key audit agg (build.py:39-53): the audit's group frame.
+    "a4_dup_audit" -> ((s, d) => DataQuality.duplicateAudit(
+      s, t(s, d, "events"), "events", Seq("user_id", "event_type"))._2
       .orderBy("user_id", "event_type")),
 
     // A5 per-column completeness profile (load_nursing_home_data.py:20-36).

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.config.DatasetConfig
 import graft.curate.Penalties
@@ -104,6 +105,38 @@ class IngestPipelineSpec extends SparkSpec {
     assert(a.getAs[Long]("duplicate_groups") == 1)
     assert(a.getAs[String]("sample_json").contains("015009"))
     assert(dups.count() == 1)
+  }
+
+  test("duplicate audit builds with no Spark job; its sample is the first groups' toJSON") {
+    // 7 duplicate groups (over sampleN = 5), null key parts, singletons
+    val df = Seq[(Option[String], Option[Int])](
+      (Some("x"), Some(1)), (Some("x"), Some(1)),
+      (Some("x"), Some(2)), (Some("x"), Some(2)), (Some("x"), Some(2)),
+      (None, Some(1)), (None, Some(1)), (Some("y"), None), (Some("y"), None),
+      (None, None), (None, None), (Some("a"), Some(5)), (Some("a"), Some(5)),
+      (Some("z"), Some(9)), (Some("z"), Some(9)), (Some("q"), Some(1)),
+      (Some("x"), Some(3))).toDF("a", "b")
+    var built: (DataFrame, DataFrame) = null
+    assert(jobsDuring {
+      built = DataQuality.duplicateAudit(spark, df, "t", Seq("a", "b"))
+    } == 0)
+    val (audit, dups) = built
+    val rows = audit.collect()
+    assert(rows.length == 1)
+    val a = rows.head
+    assert(a.getAs[String]("table_name") == "t" && a.getAs[String]("natural_key") == "a,b")
+    assert(a.getAs[Long]("duplicate_groups") == 7 && a.getAs[String]("status") == "warn")
+    // byte-identical to `dups.orderBy(keys).limit(5).toJSON` joined with ","
+    // (null fields omitted, nulls first)
+    assert(a.getAs[String]("sample_json") ==
+      """[{"n":2},{"b":1,"n":2},{"a":"a","b":5,"n":2},{"a":"x","b":1,"n":2},{"a":"x","b":2,"n":3}]""")
+    assert(audit.columns.toSeq == Seq("table_name", "natural_key", "duplicate_groups",
+      "status", "sample_json", "created_at"))
+    assert(dups.count() == 7)
+    val clean = DataQuality.duplicateAudit(spark, df.distinct(), "t", Seq("a", "b"))._1
+      .collect().head
+    assert(clean.getAs[Long]("duplicate_groups") == 0 && clean.getAs[String]("status") == "ok")
+    assert(clean.getAs[String]("sample_json") == "[]")
   }
 
   test("completeness: per-column profile incl. empty-table guard") {

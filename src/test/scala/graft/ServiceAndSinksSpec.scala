@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftBridge
 import graft.core.Graft
 import graft.service.MetricsService
 
@@ -57,28 +54,6 @@ class ServiceAndSinksSpec extends SparkSpec {
     assert(out.getDouble(out.fieldIndex("avg_total_nurse_hours")) == 187.5)
   }
 
-  /** Spark jobs `body` runs, counted in its own job group. */
-  private def jobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-service-jobs-${System.nanoTime()}"
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "service job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      GraftBridge.drainListeners(sc)
-      sc.removeSparkListener(l)
-    }
-    n.get()
-  }
-
   /** Runs `body` with the gather bound lowered to `bytes`, then restores it. */
   private def withOpenCost[T](bytes: Long)(body: => T): T = {
     val key = "spark.sql.files.openCostInBytes"
@@ -116,10 +91,10 @@ class ServiceAndSinksSpec extends SparkSpec {
   test("a read of an input under openCostInBytes runs one job; over it, the distributed plan") {
     reads.foreach { case (name, read) =>
       var small, large = Seq.empty[Row]
-      assert(jobs { small = read(metrics).collect().toSeq } == 1, name)
+      assert(jobsDuring { small = read(metrics).collect().toSeq } == 1, name)
       val distributed = withOpenCost(1) {
         assert(Graft.gather(metrics) eq metrics)
-        jobs { large = read(metrics).collect().toSeq }
+        jobsDuring { large = read(metrics).collect().toSeq }
       }
       assert(distributed > 1, name)
       assertClose(small, large, name)

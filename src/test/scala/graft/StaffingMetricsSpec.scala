@@ -45,25 +45,6 @@ class StaffingMetricsSpec extends SparkSpec {
     // — the audited count must launch EXACTLY as many jobs as the
     // unaudited one (AQE splits one action into several jobs; the audit
     // may not add any)
-    def jobsDuring(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(): Unit
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        body
-        // listener events are delivered asynchronously; settle briefly
-        val deadline = System.currentTimeMillis() + 5000
-        while (jobs.get() < 1 && System.currentTimeMillis() < deadline)
-          Thread.sleep(10)
-        Thread.sleep(200)
-      } finally spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
-    }
     val (plain, _) = StaffingMetrics.foldJoin(Seq(a, b), audit = false)
     val baseline = jobsDuring(assert(plain.count() == 0))
     val audited = jobsDuring(assert(merged.count() == 0))
@@ -73,7 +54,7 @@ class StaffingMetricsSpec extends SparkSpec {
   }
 
   test("full pipeline: hand-computed metrics (clean -> agg -> ratios)") {
-    val (out, audit) = StaffingMetrics.run(Seq(staffing, contract))
+    val (out, audit, _) = StaffingMetrics.runWithAudit(Seq(staffing, contract))
     val rows = out.collect() // first action populates the join audit
     assert(audit.emptyAfterStep.isEmpty)
     // P2 dropped (zero-sentinel nulls census -> na.drop), P3 dropped (bad
@@ -106,8 +87,9 @@ class StaffingMetricsSpec extends SparkSpec {
       .toDF("PROVNUM", "CY_Qtr", "Hrs_RN_ctr", "Hrs_LPN_ctr", "Hrs_CNA_ctr",
         "Hrs_RN_emp", "Hrs_LPN_emp", "Hrs_CNA_emp"))
     val (out, joinAudit, drops) = StaffingMetrics.runWithAudit(Seq(s, c))
-    assert(joinAudit.emptyAfterStep.isEmpty)
+    // the counters fill in on the first action
     assert(out.collect().map(_.getString(0)).toSeq == Seq("P1"))
+    assert(joinAudit.emptyAfterStep.isEmpty)
     assert(drops.zeroNulledRows == 1)       // P2: zero census
     // P2 (zero-nulled criticals), P3 (garbage quarter), P5 (null STATE)
     assert(drops.droppedCriticalRows == 3)
@@ -121,10 +103,55 @@ class StaffingMetricsSpec extends SparkSpec {
       .toDF("PROVNUM", "CY_Qtr", "Hrs_RN_ctr", "Hrs_LPN_ctr", "Hrs_CNA_ctr",
         "Hrs_RN_emp", "Hrs_LPN_emp", "Hrs_CNA_emp")
     val (out, _, drops) = StaffingMetrics.runWithAudit(Seq(s, c))
-    assert(out.isEmpty)
+    assert(out.collect().isEmpty)
     assert(drops.zeroNulledRows == 0 && drops.droppedCriticalRows == 0)
     assert(drops.zeroDenomRows == 1)    // total_employed sums to 0
     assert(drops.droppedRatioRows == 1) // its ratio is NULL -> dropped
+  }
+
+  test("building runWithAudit runs no Spark job; its audits throw until an action") {
+    var built: (org.apache.spark.sql.DataFrame, StaffingMetrics.JoinAudit,
+      StaffingMetrics.DropAudit) = null
+    assert(jobsDuring { built = StaffingMetrics.runWithAudit(Seq(staffing, contract)) } == 0)
+    val (out, joinAudit, drops) = built
+    intercept[IllegalStateException] { drops.zeroNulledRows }
+    intercept[IllegalStateException] { drops.droppedCriticalRows }
+    intercept[IllegalStateException] { drops.zeroDenomRows }
+    intercept[IllegalStateException] { drops.droppedRatioRows }
+    intercept[IllegalStateException] { joinAudit.emptyAfterStep }
+    assert(out.count() == 1)
+    // after the action the counters are read back, with no job of their own
+    assert(jobsDuring {
+      assert(joinAudit.emptyAfterStep.isEmpty)
+      assert(drops.zeroNulledRows == 1 && drops.droppedCriticalRows == 2)
+      assert(drops.zeroDenomRows == 0 && drops.droppedRatioRows == 0)
+    } == 0)
+  }
+
+  test("the audits of two runs in one plan do not clash, and fill in on a write") {
+    val (a, joinA, dropsA) = StaffingMetrics.runWithAudit(Seq(staffing, contract))
+    val (b, joinB, dropsB) = StaffingMetrics.runWithAudit(Seq(staffing, contract))
+    val dir = java.nio.file.Files.createTempDirectory("graft_metrics_audit").toString
+    a.unionByName(b).write.mode("overwrite").parquet(dir)
+    assert(spark.read.parquet(dir).count() == 2)
+    assert(joinA.emptyAfterStep.isEmpty && joinB.emptyAfterStep.isEmpty)
+    assert(dropsA.droppedCriticalRows == 2 && dropsB.droppedCriticalRows == 2)
+  }
+
+  test("the audits fill in when every joined row is dropped") {
+    // P3's garbage quarter drops its one joined row: the aggregate's input
+    // is empty
+    val (out, joinAudit, drops) = StaffingMetrics.runWithAudit(
+      Seq(staffing.where($"PROVNUM" === "P3"), contract))
+    assert(out.collect().isEmpty)
+    // AQE prunes the empty aggregate with the stage below it, so Spark
+    // reports no value for the pre-aggregate counters: the read recounts
+    var dropped = -1L
+    assert(jobsDuring { dropped = drops.droppedCriticalRows } > 0)
+    assert(dropped == 1)
+    assert(joinAudit.emptyAfterStep.isEmpty)
+    assert(drops.zeroNulledRows == 0 && drops.droppedCriticalRows == 1)
+    assert(drops.zeroDenomRows == 0 && drops.droppedRatioRows == 0)
   }
 
   test("post-aggregation zero denominator drops the row (F3 on A1 output)") {
@@ -136,7 +163,7 @@ class StaffingMetricsSpec extends SparkSpec {
     val c = Seq(("P4", "2024Q1", "1.0", "1.0", "1.0", "0.0", "0.0", "0.0"))
       .toDF("PROVNUM", "CY_Qtr", "Hrs_RN_ctr", "Hrs_LPN_ctr", "Hrs_CNA_ctr",
         "Hrs_RN_emp", "Hrs_LPN_emp", "Hrs_CNA_emp")
-    val (out, _) = StaffingMetrics.run(Seq(s, c))
+    val (out, _, _) = StaffingMetrics.runWithAudit(Seq(s, c))
     assert(out.isEmpty)
   }
 
