@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 import graft.core.Graft
 import graft.ops.{Dedup, Similarity, TextAnalysis}
@@ -133,11 +131,14 @@ object Bench {
     * reads once and computes r times.
     */
   private def replicate(df: DataFrame, r: Int): DataFrame =
-    Graft.spread(df).withColumn("__rep", explode(sequence(lit(0L), lit(r - 1L))))
+    tagReps(Graft.spread(df), r)
 
-  private def cents(c: Column): Column = round(c * 100).cast("long")
-  private def revenue(price: Column, disc: Column): Column =
-    (sum(cents(price) * (lit(100L) - cents(disc))).cast("double") / 10000)
+  /** r copies of every row of `df` in place, tagged 0..r-1 in `__rep`. */
+  private def tagReps(df: DataFrame, r: Int): DataFrame =
+    df.withColumn("__rep", explode(sequence(lit(0L), lit(r - 1L))))
+
+  /** The key prefix that keeps the replicas of a keyed query apart. */
+  private val rep = Seq("__rep")
 
   /** Resident index state, built ONCE per corpus dir in the untimed prep
     * step: the pandas twins prebuild their tf/dl frames and centroid /
@@ -159,10 +160,11 @@ object Bench {
           col("embedding").as("centv"))
         .localCheckpoint(true))
 
-  /** Fused-N variants. Each calls the SAME public operator code as the
-    * corpus query (or restates the corpus query's own expressions verbatim)
-    * over a replicated input whose keys are rep-disjoint — N semantically
-    * independent runs of the query, fused. Final ORDER BYs are kept.
+  /** Fused-N variants. Each calls the same code as the corpus query (its
+    * operator, or its body in the SparkEntry corpus with `__rep` put in
+    * front of every group, partition and sort key) over a replicated input
+    * whose keys are rep-disjoint: N semantically independent runs of the
+    * query, fused. Final ORDER BYs are kept.
     */
   private[graft] def fused(name: String, s: SparkSession, d: String, r: Int): DataFrame = {
     def t(n: String) = Graft.table(s, d, n)
@@ -173,59 +175,14 @@ object Bench {
         col("__rep"))
     name match {
       case "q1_agg" =>
-        replicate(t("lineitem"), r)
-          .groupBy("__rep", "l_returnflag", "l_linestatus")
-          .agg(
-            (sum(cents(col("l_quantity"))).cast("double") / 100).as("sum_qty"),
-            (sum(cents(col("l_extendedprice"))).cast("double") / 100).as("sum_base_price"),
-            revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
-            (sum(cents(col("l_quantity"))).cast("double") / 100 /
-              count(lit(1))).as("avg_qty"),
-            count(lit(1)).as("count_order"))
-          .orderBy("__rep", "l_returnflag", "l_linestatus")
+        SparkEntry.q1Agg(replicate(t("lineitem"), r), rep)
       case "j1_multiway_join" =>
-        // Sequential dim joins (r14, guide §3.1) — same restructure as the
-        // corpus entry: every dim is a base scan with a real size estimate
-        // so each join statically broadcasts; the pre-collapsed
-        // customer->nation->region chain had no join-output size estimate
-        // and forced a fact-side SortMergeJoin exchange. OPTIMIZATION_r14.md §1:
-        // 0.2288 -> 0.1901 s/inst (83%).
-        val li = replicate(
-          t("lineitem").select("l_orderkey", "l_extendedprice", "l_discount"), r)
-        li.join(t("orders").select("o_orderkey", "o_custkey"),
-            col("l_orderkey") === col("o_orderkey"))
-          .join(t("customer").select("c_custkey", "c_nationkey"),
-            col("o_custkey") === col("c_custkey"))
-          .join(t("nation").select("n_nationkey", "n_name", "n_regionkey"),
-            col("c_nationkey") === col("n_nationkey"))
-          .join(t("region").select("r_regionkey", "r_name"),
-            col("n_regionkey") === col("r_regionkey"))
-          .groupBy("__rep", "r_name", "n_name")
-          .agg(count(lit(1)).as("n_items"),
-            revenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-          .orderBy("__rep", "r_name", "n_name")
+        SparkEntry.j1MultiwayJoin(s, d, replicate(
+          t("lineitem").select("l_orderkey", "l_extendedprice", "l_discount"), r), rep)
       case "w1_window" =>
-        val o = replicate(t("orders").where(col("o_custkey") <= 100), r)
-        val w = Window.partitionBy("__rep", "o_custkey")
-          .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-        o.select(
-          col("__rep"), col("o_custkey"), col("o_orderkey"),
-          row_number().over(w).cast("long").as("rn"),
-          sum(col("o_totalprice").cast(DecimalType(18, 2)))
-            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-            .cast("double").as("running_total"))
-          .orderBy("__rep", "o_custkey", "rn")
+        SparkEntry.w1Window(replicate(t("orders").where(col("o_custkey") <= 100), r), rep)
       case "a8_pivot" =>
-        val types = Seq("click", "error", "purchase", "signup", "view")
-        val ev = replicate(t("events"), r)
-          .select(col("__rep"),
-            date_trunc("day", Graft.nanosToTimestamp("ts")).cast("date")
-              .cast("string").as("day"),
-            col("event_type"), col("value").cast(DecimalType(28, 10)).as("dval"))
-        val piv = ev.groupBy("__rep", "day").pivot("event_type", types).sum("dval")
-        piv.select(col("__rep") +: col("day") +:
-          types.map(ty => col(ty).cast("double").as(ty)): _*)
-          .orderBy("__rep", "day")
+        SparkEntry.a8Pivot(replicate(t("events"), r), rep)
       case "dedup_exact" =>
         Dedup.exact(repDocs, "text", "doc_id").orderBy("digest")
       case "dedup_minhash" =>
@@ -242,59 +199,19 @@ object Bench {
         // query side replicated WITHOUT replicate()'s spread: 5 rows need
         // no repartition shuffle, and bruteForceTopK's driver collect of
         // the query set would otherwise pay a 2-stage job per run
-        val q = emb.where(col("vec_id") < 5)
-          .withColumn("__rep", explode(sequence(lit(0L), lit(r - 1L))))
+        val q = tagReps(emb.where(col("vec_id") < 5), r)
           .select((col("vec_id") + col("__rep") * 1000000L).as("vec_id"),
             col("embedding"))
         Similarity.bruteForceTopK(emb, q, k = 10)
           .withColumn("cosine", round(col("cosine"), 6))
           .orderBy("query_id", "rank")
       case "dedup_passages" =>
-        // The corpus operator's pipeline verbatim (Dedup.duplicatedPassages)
-        // with __rep folded into the gram key: window occurrence counts must
-        // not pool across instances or the fused run would mark more spans
-        // than N independent runs would.
-        val k = 5
+        // ids remapped rep-disjoint, and grams counted per replica: pooled
+        // occurrence counts would mark more spans than N independent runs.
         val d0 = replicate(t("documents").select("doc_id", "text"), r)
           .select(col("__rep"), (col("doc_id") * r + col("__rep")).as("id"),
             col("text"))
-        val toks = graft.functions.Text.tokens(col("text"))
-        val n = size(toks)
-        val shifted = (0 until k).map(j => slice(toks, lit(j + 1), n))
-        val grams = shifted.reduceRight((a, b) =>
-          zip_with(a, b, (x, y) => concat(x, lit(" "), y)))
-        val windows = d0
-          .select(col("__rep"), col("id"),
-            posexplode(slice(grams, lit(1), greatest(n - (k - 1), lit(0)))))
-          .select(col("__rep"), col("id"),
-            (col("pos") + 1).cast("long").as("p"),
-            graft.functions.StableHash.hash60(col("col")).as("g"))
-        // count(*) over (partition by __rep, g) on the ONE shuffled
-        // stream (r14, same restructure as Dedup.duplicatedPassages —
-        // its scaladoc has the sf0.1/sf1/sf10 probe evidence): the
-        // corpus tokenizes once and the count/probe join disappears.
-        // OPTIMIZATION_r14.md §3, fused r=4 sf0.1: 0.5401 -> 0.4032 s/inst
-        // (75%).
-        val marked = windows
-          .withColumn("__occ",
-            count(lit(1)).over(Window.partitionBy("__rep", "g")))
-          .where(col("__occ") >= 2 && col("__occ") <= 10000)
-          .select("__rep", "id", "p")
-        val w = Window.partitionBy("id").orderBy("p") // ids are rep-disjoint
-        marked
-          .withColumn("__prev", lag(col("p"), 1).over(w))
-          .withColumn("__new",
-            when(col("__prev").isNull || col("p") > col("__prev") + k, 1L)
-              .otherwise(0L))
-          .withColumn("__island", sum(col("__new")).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)))
-          .groupBy("id", "__island")
-          .agg(min(col("p")).as("span_start"),
-            (max(col("p")) + (k - 1)).as("span_end"),
-            count(lit(1)).as("n_windows"))
-          .select(col("id"), col("span_start"), col("span_end"),
-            (col("span_end") - col("span_start") + 1).as("span_tokens"),
-            col("n_windows"))
+        Dedup.duplicatedPassages(d0, "text", "id", k = 5, scope = rep)
           .orderBy("id", "span_start")
       case "graph_pagerank" =>
         // N node-id-disjoint copies of the derived 1000-node graph run as
@@ -327,8 +244,7 @@ object Bench {
         // codebook train + corpus encode amortize across instances like any
         // resident ANN index.
         val emb = t("embeddings")
-        val q = emb.where(col("vec_id") < 5)
-          .withColumn("__rep", explode(sequence(lit(0L), lit(r - 1L))))
+        val q = tagReps(emb.where(col("vec_id") < 5), r)
           .select((col("vec_id") + col("__rep") * 1000000L).as("vec_id"),
             col("embedding"))
         Similarity.pqTopK(emb, q, k = 10, m = 8, dsub = 8,
@@ -351,8 +267,7 @@ object Bench {
         // corpus instead of shipping nBlocks·|Q| query rows, and each
         // query's top-k finishes in one buffer instead of 16 partials.
         val emb = t("embeddings")
-        val q = emb
-          .withColumn("__rep", explode(sequence(lit(0L), lit(r - 1L))))
+        val q = tagReps(emb, r)
           .select((col("vec_id") + (col("__rep") + 1L) * 1000000L).as("vec_id"),
             col("embedding"))
         Similarity.knnJoin(emb, q, k = 3, nBlocks = 16,
@@ -369,8 +284,7 @@ object Bench {
         // replication), exactness untouched — the knnJoin nBlocks
         // precedent.
         val emb = t("embeddings")
-        val q = emb
-          .withColumn("__rep", explode(sequence(lit(0L), lit(r - 1L))))
+        val q = tagReps(emb, r)
           .select((col("vec_id") + (col("__rep") + 1L) * 1000000L).as("vec_id"),
             col("embedding"))
         // Resident centroids ([[ivfCents]], pinned in the untimed prep —
@@ -383,32 +297,8 @@ object Bench {
           .orderBy("query_id", "rank")
 
       case "sketch_kmv_distinct" =>
-        // The corpus entry verbatim over replicated events with __rep in
-        // the group key: N independent sketch builds fused — hashing and
-        // the k-bounded mergeable aggregate run once per instance.
-        // Pre-dedup (rep, event_type, user_id) first (r14, guide §2.3,
-        // same restructure as the corpus entry): KMV buffers and md5 run
-        // once per DISTINCT user, the mixed distinct+object-agg plan
-        // becomes a plain two-level aggregate. OPTIMIZATION_r14.md §2: 0.1445 ->
-        // 0.1213 s/inst (84%).
-        val du = replicate(t("events").select("event_type", "user_id"), r)
-          .where(col("user_id").isNotNull)
-          .select("__rep", "event_type", "user_id").distinct()
-          .select(col("__rep"), col("event_type"),
-            graft.functions.StableHash.hash60(col("user_id").cast("string")).as("h"))
-        du.groupBy("__rep", "event_type")
-          .agg(graft.ops.Sketches.kmvMins(64)(col("h")).as("mins"),
-            count(lit(1)).as("n_exact"))
-          .select(col("__rep"), col("event_type"),
-            size(col("mins")).cast("long").as("n_kept"),
-            element_at(col("mins"), -1).as("kth_min"),
-            when(size(col("mins")) < 64, size(col("mins")).cast("long"))
-              .otherwise(expr(
-                "CAST(63 AS DECIMAL(38,0)) * 1152921504606846976" +
-                  " DIV NULLIF(element_at(mins, -1), 0)"))
-              .as("est_users"),
-            col("n_exact"))
-          .orderBy("__rep", "event_type")
+        SparkEntry.sketchKmvDistinct(
+          replicate(t("events").select("event_type", "user_id"), r), rep)
 
       case "ts_sessionize" =>
         // N user-disjoint copies of the event stream sessionized in ONE

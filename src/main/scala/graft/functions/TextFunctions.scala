@@ -131,21 +131,28 @@ object Text {
     require(k >= 1, "shingle size must be >= 1")
     val toks = tokens(text)
     val n = size(toks)
-    // Zip k shifted copies of the token array rather than slicing inside a
-    // lambda: a lambda-body reference to the token array re-evaluates the
-    // regex split per element (no CSE in interpreted higher-order
-    // functions), turning shingling O(n^2); this form does O(k) splits/row.
-    val shifted = (0 until k).map(j => slice(toks, lit(j + 1), n))
-    val grams = shifted.reduceRight((a, b) =>
-      zip_with(a, b, (x, y) => concat(x, lit(" "), y)))
-    // zip_with pads the short arrays' tails with nulls -> null shingles;
-    // keep only the first n-k+1 (the complete k-grams).
-    val full = slice(grams, lit(1), greatest(n - (k - 1), lit(0)))
     val short = array(concat_ws(" ", toks)) // < k words: one whole-text shingle
     array_distinct(
       when(n === 0, array().cast("array<string>"))
         .when(n < k, short)
-        .otherwise(full))
+        .otherwise(kGramWindows(toks, k)))
+  }
+
+  /** The n-k+1 complete positional k-grams of a token array, each joined
+    * by a space, in token order (empty when the array has fewer than k
+    * tokens). Zips k shifted copies of the array rather than slicing
+    * inside a lambda: a lambda-body reference to the token array
+    * re-evaluates the tokenizer per element (no CSE in interpreted
+    * higher-order functions), turning gram building O(n^2); this form
+    * does O(k) work per row. zip_with pads the shorter copies' tails with
+    * nulls, so only the first n-k+1 grams are complete and kept.
+    */
+  def kGramWindows(toks: Column, k: Int): Column = {
+    val n = size(toks)
+    val shifted = (0 until k).map(j => slice(toks, lit(j + 1), n))
+    val grams = shifted.reduceRight((a, b) =>
+      zip_with(a, b, (x, y) => concat(x, lit(" "), y)))
+    slice(grams, lit(1), greatest(n - (k - 1), lit(0)))
   }
 
   /** Training-data text cleaning (C4-style, public recipe family): drop

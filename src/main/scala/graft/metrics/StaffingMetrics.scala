@@ -3,6 +3,7 @@ package graft.metrics
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 import graft.functions.{Cleaning, Norm}
 
 /** The staffing-metrics pipeline (reference calculate_metrics.py): discover
@@ -70,9 +71,9 @@ object StaffingMetrics {
   final class DropAudit private[metrics] (zeroed: Counters, critical: Counters,
       ratios: Counters) {
     def zeroNulledRows: Long = zeroed("n")          // rows whose critical set was zero-nulled
-    def droppedCriticalRows: Long = critical("n")   // rows dropped for missing critical values
+    def droppedCriticalRows: Long = critical("n")   // rows dropped for a NULL/NaN critical value
     def zeroDenomRows: Long = ratios("zero_denom")  // aggregated rows with a zeroed denominator
-    def droppedRatioRows: Long = ratios("dropped")  // aggregated rows dropped for NULL ratios
+    def droppedRatioRows: Long = ratios("dropped")  // aggregated rows dropped for NULL/NaN ratios
   }
 
   /** Iterative N-way inner equi-join on (PROVNUM, CY_Qtr)
@@ -113,9 +114,9 @@ object StaffingMetrics {
 
   /** Cleaning (reference calculate_metrics.py:71-114): quarter
     * normalization, numeric coercion, row-wise zero-sentinel nulling of the
-    * critical set, then drop rows with any critical NULL. The two cleaning
-    * counters of [[DropAudit]] are observed just before the nulling and
-    * just before the drop.
+    * critical set, then drop rows with any critical NULL or NaN. The two
+    * cleaning counters of [[DropAudit]] are observed just before the
+    * nulling and just before the drop.
     *
     * The drop set is the reference's dropna subset (critical cols + STATE +
     * CY_Qtr, calculate_metrics.py:101-108) PLUS PROVNUM: the reference
@@ -126,6 +127,18 @@ object StaffingMetrics {
     */
   private val dropSubset = criticalCols ++ Seq("STATE", "CY_Qtr", "PROVNUM")
 
+  /** The rows `df.na.drop(cols)` removes: a NULL in any of `cols`, or a
+    * NaN in a floating-point one (`coerceNumeric` turns the text "NaN"
+    * into NaN, and pandas `dropna` drops it too).
+    */
+  private def dropped(df: DataFrame, cols: Seq[String]): Column =
+    cols.map { c =>
+      df.schema(c).dataType match {
+        case DoubleType | FloatType => col(c).isNull || isnan(col(c))
+        case _ => col(c).isNull
+      }
+    }.reduce(_ || _)
+
   private def clean(df: DataFrame): (DataFrame, Counters, Counters) = {
     val numericCols = requiredCols.filterNot(Seq("PROVNUM", "STATE", "CY_Qtr").contains)
     val coerced = numericCols.foldLeft(
@@ -134,8 +147,8 @@ object StaffingMetrics {
     val anyZero = criticalCols.map(col(_) === 0).reduce(_ || _)
     val nZeroed = new Counters(coerced, count(when(anyZero, 1)).as("n"))
     val zeroed = Cleaning.zeroSentinelNull(nZeroed.on, criticalCols) // :92-98
-    val anyNull = dropSubset.map(col(_).isNull).reduce(_ || _)
-    val nDropped = new Counters(zeroed, count(when(anyNull, 1)).as("n"))
+    val nDropped = new Counters(zeroed,
+      count(when(dropped(zeroed, dropSubset), 1)).as("n"))
     (nDropped.on.na.drop(dropSubset), nZeroed, nDropped)             // :101-108
   }
 
@@ -168,13 +181,13 @@ object StaffingMetrics {
         col("total_nurse_hours") / col("total_census"))               // :142
       .withColumn("contract_vs_employed_ratio",
         col("total_contract") / col("total_employed"))                // :143
+    val ratioCols = Seq("nurse_to_patient_ratio", "contract_vs_employed_ratio")
     val nRatio = new Counters(ratioed,
       count(when(col("total_census").isNull || col("total_employed").isNull, 1))
         .as("zero_denom"),
-      count(when(col("nurse_to_patient_ratio").isNull ||
-        col("contract_vs_employed_ratio").isNull, 1)).as("dropped"))
+      count(when(dropped(ratioed, ratioCols), 1)).as("dropped"))
     (nRatio.on
-      .na.drop(Seq("nurse_to_patient_ratio", "contract_vs_employed_ratio")) // :145-148
+      .na.drop(ratioCols)                                             // :145-148
       .select("PROVNUM", "STATE", "CY_Qtr",                           // :155-162
         "nurse_to_patient_ratio", "contract_vs_employed_ratio", "total_nurse_hours"),
       nRatio)

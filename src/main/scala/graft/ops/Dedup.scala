@@ -1023,9 +1023,10 @@ object Dedup {
     * 2022, "Deduplicating Training Data Makes Language Models Better",
     * which dedups repeated spans rather than whole documents).
     *
-    * Pipeline: (1) positional k-gram windows per doc (map-side; the O(k)
-    * zip_with shingling of [[graft.functions.Text.wordShingles]], kept
-    * positional and non-distinct), each window reduced MAP-SIDE to an
+    * Pipeline: (1) positional k-gram windows per doc (map-side;
+    * [[graft.functions.Text.kGramWindows]], the O(k) zip_with grams that
+    * [[graft.functions.Text.wordShingles]] de-duplicates, kept positional
+    * and non-distinct here), each window reduced MAP-SIDE to an
     * 8-byte `hash60(gram)` key — the k-token gram string never leaves the
     * map stage; (2) ONE shuffle of the (id, p, g) stream by g, then
     * `count(*) OVER (PARTITION BY g)` on the co-located rows finds and
@@ -1069,26 +1070,29 @@ object Dedup {
     * not duplicate evidence, and mark no spans (recall loss audited by
     * [[passageGramAudit]]).
     *
+    * `scope` names columns of `df` that split it into independent
+    * corpora: a gram's occurrences are counted only within its scope, so
+    * a gram repeated only across scopes marks nothing. Ids must be unique
+    * across scopes (the island merge is per id). The default `Nil` is one
+    * corpus; the fused bench passes its replica tag (`__rep`) so N
+    * replicas run as N independent detections in one plan.
+    *
     * Output: (id, span_start, span_end, span_tokens, n_windows) with
     * 1-based inclusive token positions, one row per maximal span.
     */
   def duplicatedPassages(df: DataFrame, textCol: String, idCol: String,
-      k: Int, maxGramDf: Int = 10000): DataFrame = {
+      k: Int, maxGramDf: Int = 10000, scope: Seq[String] = Nil): DataFrame = {
     require(k >= 2, "passage window must be >= 2 tokens")
     require(maxGramDf >= 2, "maxGramDf < 2 would drop every duplicated gram")
     val toks = Text.tokens(col(textCol))
-    val n = size(toks)
-    // positional k-grams: zip k shifted copies (O(k) splits/row, no CSE
-    // trap), keep the n-k+1 complete windows; pos is the 1-based start.
-    val shifted = (0 until k).map(j => slice(toks, lit(j + 1), n))
-    val grams = shifted.reduceRight((a, b) =>
-      zip_with(a, b, (x, y) => concat(x, lit(" "), y)))
-    // gram string -> 8-byte key map-side: only (id, p, g) ever shuffles.
+    val by = scope.map(col)
+    // positional k-grams, pos the 1-based start; gram string -> 8-byte key
+    // map-side: only (scope, id, p, g) ever shuffles.
     val windows = graft.core.Graft.spread(df)
-      .select(col(idCol).as("id"),
-        posexplode(slice(grams, lit(1), greatest(n - (k - 1), lit(0)))))
-      .select(col("id"), (col("pos") + 1).cast("long").as("p"),
-        StableHash.hash60(col("col")).as("g"))
+      .select(by ++ Seq(col(idCol).as("id"),
+        posexplode(Text.kGramWindows(toks, k))): _*)
+      .select(by ++ Seq(col("id"), (col("pos") + 1).cast("long").as("p"),
+        StableHash.hash60(col("col")).as("g")): _*)
     import org.apache.spark.sql.expressions.{Window => W}
     // df cap (same reduced-universe semantics as shinglePairCounts):
     // grams above maxGramDf are boilerplate (headers, licenses, viral
@@ -1099,7 +1103,7 @@ object Dedup {
     // tokenize, no join (scaladoc above for the r13/r10 alternatives and
     // the sf1/sf10 probe numbers).
     val marked = windows
-      .withColumn("__occ", count(lit(1)).over(W.partitionBy("g")))
+      .withColumn("__occ", count(lit(1)).over(W.partitionBy(by :+ col("g"): _*)))
       .where(col("__occ") >= 2 && col("__occ") <= maxGramDf)
       .select("id", "p")
     val w = W.partitionBy("id").orderBy("p")
@@ -1131,15 +1135,9 @@ object Dedup {
   def passageGramAudit(df: DataFrame, textCol: String, idCol: String,
       k: Int, maxGramDf: Int = 10000): DataFrame = {
     require(k >= 2, "passage window must be >= 2 tokens")
-    val toks = Text.tokens(col(textCol))
-    val n = size(toks)
-    val shifted = (0 until k).map(j => slice(toks, lit(j + 1), n))
-    val grams = shifted.reduceRight((a, b) =>
-      zip_with(a, b, (x, y) => concat(x, lit(" "), y)))
     val windows = graft.core.Graft.spread(df)
       .select(col(idCol).as("id"),
-        explode(slice(grams, lit(1), greatest(n - (k - 1), lit(0))))
-          .as("gram"))
+        explode(Text.kGramWindows(Text.tokens(col(textCol)), k)).as("gram"))
     windows.groupBy("gram").agg(count(lit(1)).as("occ"))
       .agg(count(lit(1)).as("n_grams"),
         coalesce(sum(when(col("occ") >= 2, 1L).otherwise(0L)), lit(0L))

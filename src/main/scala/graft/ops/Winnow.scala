@@ -38,13 +38,9 @@ object Winnow {
       k: Int): DataFrame = {
     val toks = Text.tokens(col(textCol))
     val n = size(toks)
-    val shifted = (0 until k).map(j => slice(toks, lit(j + 1), n))
-    val grams = shifted.reduceRight((a, b) =>
-      zip_with(a, b, (x, y) => concat(x, lit(" "), y)))
-    val full = slice(grams, lit(1), greatest(n - (k - 1), lit(0)))
     val seq = when(n === 0, array().cast("array<string>"))
       .when(n < k, array(concat_ws(" ", toks)))
-      .otherwise(full)
+      .otherwise(Text.kGramWindows(toks, k))
     df.select(col(idCol).as("id"), posexplode(seq).as(Seq("pos0", "gram")))
       .select(col("id"), (col("pos0") + 1).cast("long").as("pos"), col("gram"))
   }

@@ -18,6 +18,22 @@ import graft.quality.DataQuality
   */
 private[graft] trait QueriesGraphEvents { this: SparkEntry.type =>
 
+  /** w1_window over the filtered orders frame `o`; `by` goes in front of
+    * the window partition and the sort (the headline-body convention of
+    * [[QueriesRelational]]).
+    */
+  private[graft] def w1Window(o: DataFrame, by: Seq[String]): DataFrame = {
+    val w = Window.partitionBy((by :+ "o_custkey").map(col): _*)
+      .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
+    o.select(by.map(col) ++ Seq(
+      col("o_custkey"), col("o_orderkey"),
+      row_number().over(w).cast("long").as("rn"),
+      sum(col("o_totalprice").cast(DecimalType(18, 2)))
+        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+        .cast("double").as("running_total")): _*)
+      .orderBy((by ++ Seq("o_custkey", "rn")).map(col): _*)
+  }
+
   protected def graphEventsQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Frame-clause window battery: cume_dist, first/last/nth over running
@@ -44,18 +60,8 @@ private[graft] trait QueriesGraphEvents { this: SparkEntry.type =>
     }),
 
     // Window functions (engine surface beyond the reference; SURVEY §2.5).
-    "w1_window" -> ((s, d) => {
-      val o = t(s, d, "orders").where(col("o_custkey") <= 100)
-      val w = Window.partitionBy("o_custkey")
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      o.select(
-        col("o_custkey"), col("o_orderkey"),
-        row_number().over(w).cast("long").as("rn"),
-        sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double").as("running_total"))
-        .orderBy("o_custkey", "rn")
-    }),
+    "w1_window" -> ((s, d) =>
+      w1Window(t(s, d, "orders").where(col("o_custkey") <= 100), Nil)),
 
     // Sessionization (window-function tier): 30-minute inactivity gap over
     // the raw epoch-nanos column — exact integer math, oracle-reproducible.

@@ -18,6 +18,45 @@ import graft.quality.DataQuality
   */
 private[graft] trait QueriesPipeline { this: SparkEntry.type =>
 
+  /** sketch_kmv_distinct over an events frame holding at least
+    * (event_type, user_id); `by` goes in front of the dedup, group and
+    * sort keys (the headline-body convention of [[QueriesRelational]]).
+    */
+  private[graft] def sketchKmvDistinct(events: DataFrame,
+      by: Seq[String]): DataFrame = {
+    val keys = (by :+ "event_type").map(col)
+    // Pre-dedup (event_type, user_id) BEFORE hashing and sketching
+    // (r14, guide §2.3 two-level aggregate): the previous form ran
+    // countDistinct(user_id) NEXT TO the KMV object aggregate, which
+    // Spark plans as a 3-exchange mixed distinct+object-agg (partial
+    // KMV buffers built over every RAW event row, md5 per event). Now
+    // one plain (event_type, user_id) aggregate dedups first — map-side
+    // partial combine collapses repeat visitors before the wire — and
+    // the KMV insert + md5 run once per DISTINCT user; n_exact is a
+    // plain count of the deduped rows (== countDistinct by
+    // construction). Measured (OPTIMIZATION_r14.md §2, fused r=8, sf0.1):
+    // 0.1445 -> 0.1213 s/inst (84%). Output byte-identical (KMV keeps
+    // the k smallest DISTINCT hashes — duplicate insertion was already
+    // a no-op; the estimator and kept set cannot move).
+    val du = events
+      .where(col("user_id").isNotNull)
+      .select(keys :+ col("user_id"): _*).distinct()
+      .select(keys :+ StableHash.hash60(col("user_id").cast("string")).as("h"): _*)
+    du.groupBy(keys: _*)
+      .agg(Sketches.kmvMins(64)(col("h")).as("mins"),
+        count(lit(1)).as("n_exact"))
+      .select(keys ++ Seq(
+        size(col("mins")).cast("long").as("n_kept"),
+        element_at(col("mins"), -1).as("kth_min"),
+        when(size(col("mins")) < 64, size(col("mins")).cast("long"))
+          .otherwise(expr(
+            "CAST(63 AS DECIMAL(38,0)) * 1152921504606846976" +
+              " DIV NULLIF(element_at(mins, -1), 0)"))
+          .as("est_users"),
+        col("n_exact")): _*)
+      .orderBy(keys: _*)
+  }
+
   protected def pipelineQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Declarative DQ constraint suite (Deequ-style): four checks over
@@ -378,39 +417,8 @@ private[graft] trait QueriesPipeline { this: SparkEntry.type =>
     // k-bounded mergeable aggregate — 64 longs per group cross the
     // shuffle, never the user ids; estimator (k-1)·2^60 DIV kth_min in
     // DECIMAL(38)/HUGEINT (63·2^60 overflows BIGINT).
-    "sketch_kmv_distinct" -> ((s, d) => {
-      // Pre-dedup (event_type, user_id) BEFORE hashing and sketching
-      // (r14, guide §2.3 two-level aggregate): the previous form ran
-      // countDistinct(user_id) NEXT TO the KMV object aggregate, which
-      // Spark plans as a 3-exchange mixed distinct+object-agg (partial
-      // KMV buffers built over every RAW event row, md5 per event). Now
-      // one plain (event_type, user_id) aggregate dedups first — map-side
-      // partial combine collapses repeat visitors before the wire — and
-      // the KMV insert + md5 run once per DISTINCT user; n_exact is a
-      // plain count of the deduped rows (== countDistinct by
-      // construction). Measured (OPTIMIZATION_r14.md §2, fused r=8, sf0.1):
-      // 0.1445 -> 0.1213 s/inst (84%). Output byte-identical (KMV keeps
-      // the k smallest DISTINCT hashes — duplicate insertion was already
-      // a no-op; the estimator and kept set cannot move).
-      val du = Graft.spread(t(s, d, "events"))
-        .where(col("user_id").isNotNull)
-        .select("event_type", "user_id").distinct()
-        .select(col("event_type"),
-          StableHash.hash60(col("user_id").cast("string")).as("h"))
-      du.groupBy("event_type")
-        .agg(Sketches.kmvMins(64)(col("h")).as("mins"),
-          count(lit(1)).as("n_exact"))
-        .select(col("event_type"),
-          size(col("mins")).cast("long").as("n_kept"),
-          element_at(col("mins"), -1).as("kth_min"),
-          when(size(col("mins")) < 64, size(col("mins")).cast("long"))
-            .otherwise(expr(
-              "CAST(63 AS DECIMAL(38,0)) * 1152921504606846976" +
-                " DIV NULLIF(element_at(mins, -1), 0)"))
-            .as("est_users"),
-          col("n_exact"))
-        .orderBy("event_type")
-    }),
+    "sketch_kmv_distinct" -> ((s, d) =>
+      sketchKmvDistinct(Graft.spread(t(s, d, "events")), Nil)),
 
     // Cross-RUN incremental twin of sketch_kmv_distinct: run 1 ingested
     // batch 1 (event_id % 3 != 0) and PERSISTED its per-type KMV kept

@@ -18,6 +18,73 @@ import graft.quality.DataQuality
   */
 private[graft] trait QueriesRelational { this: SparkEntry.type =>
 
+  // Headline bodies. Each takes its prepared input and `by`, the columns
+  // put in front of every group, partition and sort key: the corpus entry
+  // passes Nil, and Bench.fused passes its replica tag over a replicated
+  // input, so the headline times the corpus plan itself.
+
+  /** q1_agg over lineitem. */
+  private[graft] def q1Agg(li: DataFrame, by: Seq[String]): DataFrame = {
+    val keys = (by ++ Seq("l_returnflag", "l_linestatus")).map(col)
+    li.groupBy(keys: _*)
+      .agg(
+        (sum(cents(col("l_quantity"))).cast("double") / 100).as("sum_qty"),
+        (sum(cents(col("l_extendedprice"))).cast("double") / 100).as("sum_base_price"),
+        revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
+        (sum(cents(col("l_quantity"))).cast("double") / 100 /
+          count(lit(1))).as("avg_qty"),
+        count(lit(1)).as("count_order"))
+      .orderBy(keys: _*)
+  }
+
+  /** j1_multiway_join over the (l_orderkey, l_extendedprice, l_discount)
+    * fact frame `li`; the dims are read from `d`.
+    */
+  private[graft] def j1MultiwayJoin(s: SparkSession, d: String,
+      li: DataFrame, by: Seq[String]): DataFrame = {
+    val keys = (by ++ Seq("r_name", "n_name")).map(col)
+    val o = t(s, d, "orders").select("o_orderkey", "o_custkey")
+    // Dims join the fact SEQUENTIALLY (r14, guide §3.1): each dim side
+    // is a base parquet scan with a real size statistic, so every join
+    // statically plans as a broadcast hash join and the fact side never
+    // shuffles. The previous form pre-collapsed customer->nation->region
+    // into one dim ("probe 2 hash tables, not 4") — but a JOIN OUTPUT
+    // has no usable size estimate, the 10 MB threshold could not prove
+    // the collapsed dim small, and the fact->cdim join fell back to a
+    // SortMergeJoin that exchanged the whole fact side by o_custkey
+    // (plans/r14/j1_multiway_join_before.txt, operators 23-25).
+    // Measured (OPTIMIZATION_r14.md §1, fused r=8, sf0.1): 0.2288 -> 0.1901
+    // s/inst (83%); after-plan has ZERO SortMergeJoins.
+    // No broadcast() hints: at 100 TB AQE picks shuffle joins instead
+    // of a forced OOM.
+    li.join(o, col("l_orderkey") === col("o_orderkey"))
+      .join(t(s, d, "customer").select("c_custkey", "c_nationkey"),
+        col("o_custkey") === col("c_custkey"))
+      .join(t(s, d, "nation")
+        .select("n_nationkey", "n_name", "n_regionkey"),
+        col("c_nationkey") === col("n_nationkey"))
+      .join(t(s, d, "region").select("r_regionkey", "r_name"),
+        col("n_regionkey") === col("r_regionkey"))
+      .groupBy(keys: _*)
+      .agg(count(lit(1)).as("n_items"),
+        revenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
+      .orderBy(keys: _*)
+  }
+
+  /** a8_pivot over events. */
+  private[graft] def a8Pivot(events: DataFrame, by: Seq[String]): DataFrame = {
+    val types = Seq("click", "error", "purchase", "signup", "view")
+    val keys = (by :+ "day").map(col)
+    val ev = events
+      .select(by.map(col) ++ Seq(
+        date_trunc("day", Graft.nanosToTimestamp("ts")).cast("date")
+          .cast("string").as("day"),
+        col("event_type"), col("value").cast(DecimalType(28, 10)).as("dval")): _*)
+    val piv = ev.groupBy(keys: _*).pivot("event_type", types).sum("dval")
+    piv.select(keys ++ types.map(ty => col(ty).cast("double").as(ty)): _*)
+      .orderBy(keys: _*)
+  }
+
   protected def relationalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // S1/S3 glob multi-file CSV scan with declared casts: nation split into
@@ -76,16 +143,7 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
     }),
 
     // A1 group-by multi-agg (reference calculate_metrics.py:123-131 shape).
-    "q1_agg" -> ((s, d) => t(s, d, "lineitem")
-      .groupBy("l_returnflag", "l_linestatus")
-      .agg(
-        (sum(cents(col("l_quantity"))).cast("double") / 100).as("sum_qty"),
-        (sum(cents(col("l_extendedprice"))).cast("double") / 100).as("sum_base_price"),
-        revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
-        (sum(cents(col("l_quantity"))).cast("double") / 100 /
-          count(lit(1))).as("avg_qty"),
-        count(lit(1)).as("count_order"))
-      .orderBy("l_returnflag", "l_linestatus")),
+    "q1_agg" -> ((s, d) => q1Agg(t(s, d, "lineitem"), Nil)),
 
     // Salted two-stage aggregation (skew-safe agg). The oracle computes
     // the PLAIN group-by: the salting must be result-invisible — exact
@@ -177,34 +235,8 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
     "j1_multiway_join" -> ((s, d) => {
       // spread: the single-row-group fact file scans as ONE partition;
       // without it the whole broadcast-probe chain runs on one core
-      val li = Graft.spread(t(s, d, "lineitem")
-        .select("l_orderkey", "l_extendedprice", "l_discount"))
-      val o = t(s, d, "orders").select("o_orderkey", "o_custkey")
-      // Dims join the fact SEQUENTIALLY (r14, guide §3.1): each dim side
-      // is a base parquet scan with a real size statistic, so every join
-      // statically plans as a broadcast hash join and the fact side never
-      // shuffles. The previous form pre-collapsed customer->nation->region
-      // into one dim ("probe 2 hash tables, not 4") — but a JOIN OUTPUT
-      // has no usable size estimate, the 10 MB threshold could not prove
-      // the collapsed dim small, and the fact->cdim join fell back to a
-      // SortMergeJoin that exchanged the whole fact side by o_custkey
-      // (plans/r14/j1_multiway_join_before.txt, operators 23-25).
-      // Measured (OPTIMIZATION_r14.md §1, fused r=8, sf0.1): 0.2288 -> 0.1901
-      // s/inst (83%); after-plan has ZERO SortMergeJoins.
-      // No broadcast() hints: at 100 TB AQE picks shuffle joins instead
-      // of a forced OOM.
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, d, "customer").select("c_custkey", "c_nationkey"),
-          col("o_custkey") === col("c_custkey"))
-        .join(t(s, d, "nation")
-          .select("n_nationkey", "n_name", "n_regionkey"),
-          col("c_nationkey") === col("n_nationkey"))
-        .join(t(s, d, "region").select("r_regionkey", "r_name"),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(count(lit(1)).as("n_items"),
-          revenue(col("l_extendedprice"), col("l_discount")).as("revenue"))
-        .orderBy("r_name", "n_name")
+      j1MultiwayJoin(s, d, Graft.spread(t(s, d, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_discount")), Nil)
     }),
 
     // J1 iterative fold-join with deterministic collision renaming
@@ -544,16 +576,7 @@ private[graft] trait QueriesRelational { this: SparkEntry.type =>
 
     // A8 pivot aggregation (metrics_dashboard.py:34-39), explicit values
     // for a deterministic single-pass plan (SURVEY §7.4.9).
-    "a8_pivot" -> ((s, d) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      val ev = t(s, d, "events")
-        .select(date_trunc("day", Graft.nanosToTimestamp("ts")).cast("date")
-          .cast("string").as("day"),
-          col("event_type"), col("value").cast(DecimalType(28, 10)).as("dval"))
-      val piv = ev.groupBy("day").pivot("event_type", types).sum("dval")
-      piv.select(col("day") +: types.map(ty => col(ty).cast("double").as(ty)): _*)
-        .orderBy("day")
-    }),
+    "a8_pivot" -> ((s, d) => a8Pivot(t(s, d, "events"), Nil)),
 
     // DYNAMIC pivot: spine columns discovered from the data (one bounded
     // distinct-collect — the two-pass shape every dynamic-pivot engine

@@ -72,10 +72,11 @@ object Probe {
   final case class Report(dir: String, loadAvg: Double, results: Seq[Result],
       parity: String, pairs: Seq[(String, String, Boolean)])
 
-  private final case class Target(name: String, instances: Int,
+  private[tools] final case class Target(name: String, instances: Int,
       build: (SparkSession, String) => DataFrame)
 
-  private def resolve(name: String): Target =
+  /** A target name to the query it builds; shared with [[Explain]]. */
+  private[tools] def resolve(name: String): Target =
     if (name.startsWith("fused:")) {
       val q = name.stripPrefix("fused:")
       val r = graft.Bench.headline.toMap.getOrElse(q, throw new UnknownTarget(name))

@@ -109,6 +109,39 @@ class StaffingMetricsSpec extends SparkSpec {
     assert(drops.droppedRatioRows == 1) // its ratio is NULL -> dropped
   }
 
+  private def pbj(staff: Seq[(String, String, String, String, String, String, String)],
+      contr: Seq[(String, String, String, String, String, String, String, String)]) =
+    Seq(staff.toDF("PROVNUM", "STATE", "CY_Qtr", "MDScensus", "Hrs_RN", "Hrs_LPN", "Hrs_CNA"),
+      contr.toDF("PROVNUM", "CY_Qtr", "Hrs_RN_ctr", "Hrs_LPN_ctr", "Hrs_CNA_ctr",
+        "Hrs_RN_emp", "Hrs_LPN_emp", "Hrs_CNA_emp"))
+
+  test("droppedCriticalRows counts a NaN critical value, as na.drop drops it") {
+    // coerceNumeric turns the text "NaN" into a NaN double, which na.drop
+    // (like pandas dropna, calculate_metrics.py:100-113) removes
+    val (out, _, drops) = StaffingMetrics.runWithAudit(pbj(
+      Seq(("P1", "TX", "2024Q1", "10", "1.0", "1.0", "1.0"),
+        ("P2", "TX", "2024Q1", "NaN", "1.0", "1.0", "1.0")),
+      Seq(("P1", "2024Q1", "1.0", "1.0", "1.0", "2.0", "2.0", "2.0"),
+        ("P2", "2024Q1", "1.0", "1.0", "1.0", "2.0", "2.0", "2.0"))))
+    assert(out.collect().map(_.getString(0)).toSeq == Seq("P1"))
+    assert(drops.zeroNulledRows == 0)
+    assert(drops.droppedCriticalRows == 1)
+    assert(drops.zeroDenomRows == 0 && drops.droppedRatioRows == 0)
+  }
+
+  test("droppedRatioRows counts a NaN ratio, as na.drop drops it") {
+    // a NaN contract hour survives cleaning (not a critical column), sums
+    // to a NaN total_contract and so a NaN contract_vs_employed_ratio
+    val (out, _, drops) = StaffingMetrics.runWithAudit(pbj(
+      Seq(("P1", "TX", "2024Q1", "10", "1.0", "1.0", "1.0"),
+        ("P2", "TX", "2024Q1", "10", "1.0", "1.0", "1.0")),
+      Seq(("P1", "2024Q1", "1.0", "1.0", "1.0", "2.0", "2.0", "2.0"),
+        ("P2", "2024Q1", "NaN", "1.0", "1.0", "2.0", "2.0", "2.0"))))
+    assert(out.collect().map(_.getString(0)).toSeq == Seq("P1"))
+    assert(drops.droppedCriticalRows == 0 && drops.zeroDenomRows == 0)
+    assert(drops.droppedRatioRows == 1)
+  }
+
   test("building runWithAudit runs no Spark job; its audits throw until an action") {
     var built: (org.apache.spark.sql.DataFrame, StaffingMetrics.JoinAudit,
       StaffingMetrics.DropAudit) = null
