@@ -29,9 +29,6 @@ object Text {
     when(c.isNull || trim(c) === "", array().cast("array<string>"))
       .otherwise(split(trim(lower(c)), "\\s+"))
 
-  /** Whitespace token count. */
-  def tokenCount(c: Column): Column = size(tokens(c)).cast("long")
-
   /** BPE-ish subword count: word pieces + digits + punctuation, the classic
     * GPT-2-style pre-tokenizer shape (public pattern family). Counts matches
     * of letter-runs / digit-runs / single non-space symbols.
@@ -86,13 +83,10 @@ object Text {
     when(best.getField("hits") > 0, best.getField("lang")).otherwise(lit("und"))
   }
 
-  /** Heuristic quality signals: char length, token count, punctuation ratio,
-    * stopword ratio, mean token length. Returns a struct column.
+  /** Heuristic quality signals of `text` from its tokens `toks`: char
+    * length, token count, punctuation ratio, stopword ratio, mean token
+    * length. Returns a struct column.
     */
-  def qualityStruct(text: Column): Column =
-    qualityStructFromTokens(text, tokens(coalesce(text, lit(""))))
-
-  /** Token-parameterized variant (see [[languageIdFromTokens]]). */
   def qualityStructFromTokens(text: Column, toks: Column): Column = {
     val t = coalesce(text, lit(""))
     val nChars = length(t).cast("double")
@@ -110,13 +104,10 @@ object Text {
     )
   }
 
-  /** Composite quality score in [0,1]: rewards stopword presence and sane
-    * token lengths, penalizes punctuation soup and very short docs.
+  /** Composite quality score in [0,1] from a [[qualityStructFromTokens]]
+    * column: rewards stopword presence and sane token lengths, penalizes
+    * punctuation soup and very short docs.
     */
-  def qualityScore(text: Column): Column =
-    qualityScoreFromStruct(qualityStruct(text))
-
-  /** Score from an already-computed [[qualityStruct]] column. */
   def qualityScoreFromStruct(q: Column): Column = {
     val lenScore = least(q.getField("n_tokens").cast("double") / 50.0, lit(1.0))
     val punctScore = greatest(lit(1.0) - q.getField("punct_ratio") * 5.0, lit(0.0))

@@ -1,9 +1,9 @@
 package graft.metrics
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.types.{DoubleType, FloatType}
+import graft.core.Counters
 import graft.functions.{Cleaning, Norm}
 
 /** The staffing-metrics pipeline (reference calculate_metrics.py): discover
@@ -24,28 +24,6 @@ object StaffingMetrics {
     "Hrs_RN_emp", "Hrs_LPN_emp", "Hrs_CNA_emp")
 
   val criticalCols = Seq("MDScensus", "Hrs_RN", "Hrs_LPN", "Hrs_CNA")
-
-  /** `observe()` counters on `frame`: build on [[on]], and the counters
-    * fill in on the first action over it at no extra job. A read first
-    * delivers the listener events already posted, so it sees an action that
-    * has returned; before any action it throws, and it never waits for one.
-    * When AQE prunes the node (a stage above it came out empty), Spark
-    * reports no value, and the read recounts over `frame` with one job.
-    * Shared by [[JoinAudit]] and [[DropAudit]].
-    */
-  private[metrics] final class Counters(frame: DataFrame, metrics: Column*) {
-    private val o = Observation()
-    val on: DataFrame = frame.observe(o, metrics.head, metrics.tail: _*)
-    private lazy val recount = frame.agg(metrics.head, metrics.tail: _*).head()
-    def apply(name: String): Long = {
-      GraftBridge.drainListeners(frame.sparkSession.sparkContext)
-      if (!o.future.isCompleted) throw new IllegalStateException(
-        "the audit counters fill in on the first action over the audited " +
-          "frame: run one (write/collect/count) before reading them")
-      GraftBridge.observationOrEmpty(o).getOrElse(name, recount.getAs[Long](name))
-        .asInstanceOf[Long]
-    }
-  }
 
   /** Join audit. `steps` is eager. `emptyAfterStep` (the reference's
     * `empty_merges`) is populated by the FIRST action on the joined frame:
@@ -97,7 +75,7 @@ object StaffingMetrics {
       val renamed = clash.foldLeft(f)((d, c) => d.withColumnRenamed(c, s"${c}_f$i"))
       merged = merged.join(renamed, keys, "inner")
       if (audit) { // :57-62 empty-merge audit
-        val c = new Counters(merged, count(lit(1)).as("rows"))
+        val c = Counters(merged, count(lit(1)).as("rows"))
         merged = c.on
         rows ::= (i, c)
       }
@@ -145,9 +123,9 @@ object StaffingMetrics {
       df.withColumn("CY_Qtr", Norm.normalizeQuarter(col("CY_Qtr")))  // :74
     )((d, c) => d.withColumn(c, Cleaning.coerceNumeric(col(c))))     // :88-90
     val anyZero = criticalCols.map(col(_) === 0).reduce(_ || _)
-    val nZeroed = new Counters(coerced, count(when(anyZero, 1)).as("n"))
+    val nZeroed = Counters(coerced, count(when(anyZero, 1)).as("n"))
     val zeroed = Cleaning.zeroSentinelNull(nZeroed.on, criticalCols) // :92-98
-    val nDropped = new Counters(zeroed,
+    val nDropped = Counters(zeroed,
       count(when(dropped(zeroed, dropSubset), 1)).as("n"))
     (nDropped.on.na.drop(dropSubset), nZeroed, nDropped)             // :101-108
   }
@@ -182,7 +160,7 @@ object StaffingMetrics {
       .withColumn("contract_vs_employed_ratio",
         col("total_contract") / col("total_employed"))                // :143
     val ratioCols = Seq("nurse_to_patient_ratio", "contract_vs_employed_ratio")
-    val nRatio = new Counters(ratioed,
+    val nRatio = Counters(ratioed,
       count(when(col("total_census").isNull || col("total_employed").isNull, 1))
         .as("zero_denom"),
       count(when(dropped(ratioed, ratioCols), 1)).as("dropped"))

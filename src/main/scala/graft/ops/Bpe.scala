@@ -90,17 +90,6 @@ object Bpe {
     (merges.result(), vocab)
   }
 
-  /** Apply an ordered merge list to a symbol array — each merge is one
-    * [[mergePair]] left-to-right rewrite, folded in training order.
-    * (With the native [[graft.plans.BpeMerge]] each step references its
-    * input exactly once, so nesting k merges in one expression is linear
-    * — the exponential re-evaluation hazard of the old HOF form is
-    * gone; [[encodeDocs]] still materializes per-merge projections,
-    * which also keeps each step visible in the plan.)
-    */
-  def applyMerges(sym: Column, merges: Seq[(String, String)]): Column =
-    merges.foldLeft(sym) { case (s, (a, b)) => mergePair(s, a, b) }
-
   /** Word-boundary sentinel for [[encodeDocs]]: merges are over real
     * symbols, so the NUL marker between words is inert and never merges
     * across a word boundary. */

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import graft.core.Counters
 import graft.functions.{StableHash, Text, Vectors}
 
 /** Deduplication operators for LLM-training-data pipelines (north-star
@@ -108,7 +109,7 @@ object Dedup {
     * buckets with >1 member are the near-dup candidate sets. Shuffle key
     * is (band, bucket-hash): uniform by construction, skew-free at scale.
     *
-    * Hot-bucket guard (`maxBucket`, the [[simhashHammingPairsAudited]]
+    * Hot-bucket guard (`maxBucket`, the [[simhashHammingPairs]]
     * discipline): near-identical boilerplate that survives exact dedup
     * (templated pages, every-empty-doc signatures) can put arbitrarily
     * many docs in one bucket, and a bucket of n docs costs n^2 downstream
@@ -193,9 +194,10 @@ object Dedup {
     * them, and the within-bucket pairs n(n-1)/2 they would have fanned
     * into. A non-zero drop count separates "clean corpus" from "reduced
     * recall" when the capped pair join comes back sparse. Same
-    * no-silent-caps contract (and same deliberately-separate lazily
-    * planned frame, not an `observe()` metric) as
-    * [[simhashHammingPairsAudited]].
+    * no-silent-caps contract as [[simhashBucketAudit]]: a standalone
+    * query over the uncapped histogram (the corpus entry
+    * `dedup_minhash_bucket_audit`, replayed by its DuckDB twin), run when
+    * the caller asks for it rather than on every operator call.
     */
   def minhashBucketAudit(df: DataFrame, textCol: String, idCol: String,
       numHashes: Int = 16, bands: Int = 4, shingleK: Int = 3,
@@ -203,21 +205,16 @@ object Dedup {
     minhashBucketCounts(df, textCol, idCol, numHashes, bands, shingleK)
       .select(col("n_members").as("n"))
       .agg(count(lit(1)).as("n_buckets"),
-        coalesce(sum(when(col("n") > maxBucket, 1L).otherwise(0L)), lit(0L))
-          .as("n_dropped_buckets"),
-        coalesce(sum(when(col("n") > maxBucket, col("n")).otherwise(0L)),
-          lit(0L)).as("n_dropped_rows"),
-        coalesce(sum(when(col("n") > maxBucket,
-          expr("n * (n - 1) DIV 2")).otherwise(0L)), lit(0L))
+        overCap(col("n"), maxBucket, lit(1L)).as("n_dropped_buckets"),
+        overCap(col("n"), maxBucket, col("n")).as("n_dropped_rows"),
+        overCap(col("n"), maxBucket, expr("n * (n - 1) DIV 2"))
           .as("n_dropped_pairs"))
 
-  /** [[minhashBuckets]] plus its [[minhashBucketAudit]] side frame. */
-  def minhashBucketsAudited(df: DataFrame, textCol: String, idCol: String,
-      numHashes: Int = 16, bands: Int = 4, shingleK: Int = 3,
-      maxBucket: Int = 1024): (DataFrame, DataFrame) =
-    (minhashBuckets(df, textCol, idCol, numHashes, bands, shingleK, maxBucket),
-      minhashBucketAudit(df, textCol, idCol, numHashes, bands, shingleK,
-        maxBucket))
+  /** The drop sums of the capped-rail audits: Σ `v` over the histogram
+    * rows whose count `n` is over `cap`, 0 when none is.
+    */
+  private def overCap(n: Column, cap: Int, v: Column): Column =
+    coalesce(sum(when(n > cap, v).otherwise(0L)), lit(0L))
 
   /** Verified near-dup pairs: LSH candidates re-checked with true shingle
     * Jaccard >= `threshold`. The verify join is bucket-local (candidates
@@ -351,50 +348,14 @@ object Dedup {
     */
   def simhashHammingPairs(df: DataFrame, textCol: String, idCol: String,
       bits: Int = 60, blocks: Int = 4, maxHamming: Int = 3,
-      maxBucket: Int = 1024): DataFrame =
-    simhashHammingPairsAudited(df, textCol, idCol, bits, blocks,
-      maxHamming, maxBucket)._1
-
-  /** [[simhashHammingPairs]] plus a recall-loss audit: the second frame
-    * is ONE row `(n_buckets, n_dropped_buckets, n_dropped_rows)` over
-    * the same chunk-bucket histogram — buckets suppressed by the
-    * hot-bucket cap and the signature entries inside them. A non-zero
-    * drop count means pairs whose EVERY agreeing chunk is hot were
-    * silently excluded; downstream dedup audits can alert on it
-    * instead of mistaking reduced recall for a clean corpus. The audit
-    * is a separate lazily-planned frame (map-side sig pass + one
-    * bounded aggregate), deterministic and SQL-replayable — NOT an
-    * `observe()` metric, which AQE's empty-relation propagation can
-    * prune out of the executed plan exactly when the cap fires hardest
-    * (all buckets hot → empty pair result → CollectMetrics eliminated,
-    * metrics lost).
-    */
-  def simhashHammingPairsAudited(df: DataFrame, textCol: String,
-      idCol: String, bits: Int = 60, blocks: Int = 4, maxHamming: Int = 3,
-      maxBucket: Int = 1024): (DataFrame, DataFrame) = {
-    require(bits % blocks == 0, "blocks must divide bits")
+      maxBucket: Int = 1024): DataFrame = {
     require(blocks > maxHamming, "need blocks > maxHamming (pigeonhole)")
-    require(bits <= 60, "sign bit must stay clear (hash60 width)")
-    val width = bits / blocks
-    val mask = (1L << width) - 1L
-    val sigs = df.select(col(idCol).as("id"),
-      simhash(col(textCol), bits).as("sig"))
-    val blocked = sigs.select(col("id"), col("sig"), posexplode(
-        array((0 until blocks).map(bl =>
-          expr(s"shiftright(sig, ${bl * width}) & $mask")): _*))
-      .as(Seq("blk", "bval")))
-    val capAudit = blocked.groupBy("blk", "bval")
-      .agg(count(lit(1)).as("n"))
-      .agg(count(lit(1)).as("n_buckets"),
-        coalesce(sum(when(col("n") > maxBucket, 1L).otherwise(0L)), lit(0L))
-          .as("n_dropped_buckets"),
-        coalesce(sum(when(col("n") > maxBucket, col("n")).otherwise(0L)),
-          lit(0L)).as("n_dropped_rows"))
-    val buckets = blocked.groupBy("blk", "bval")
+    val buckets = simhashBlocked(df, textCol, idCol, bits, blocks)
+      .groupBy("blk", "bval")
       .agg(sort_array(collect_list(struct(col("id"), col("sig"))))
         .as("ms"), count(lit(1)).as("n"))
       .where(col("n") > 1 && col("n") <= maxBucket)
-    val pairs = buckets
+    buckets
       .select(explode(col("ms")).as("a"), col("ms"))
       .select(col("a"), explode(col("ms")).as("b"))
       .where(col("a.id") < col("b.id"))
@@ -404,14 +365,43 @@ object Dedup {
       .withColumn("hamming", expr("CAST(bit_count(sig_a ^ sig_b) AS BIGINT)"))
       .where(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-    (pairs, capAudit)
   }
 
-  /** Standalone form of [[simhashHammingPairsAudited]]'s audit frame. */
+  /** Recall-loss audit for [[simhashHammingPairs]]' hot-bucket cap: ONE
+    * row `(n_buckets, n_dropped_buckets, n_dropped_rows)` over the same
+    * chunk-bucket histogram — buckets suppressed by the cap and the
+    * signature entries inside them. A non-zero drop count means pairs
+    * whose EVERY agreeing chunk is hot were silently excluded; downstream
+    * dedup audits can alert on it instead of mistaking reduced recall
+    * for a clean corpus. A standalone query (map-side sig pass + one
+    * bounded aggregate), deterministic and replayed by the DuckDB twin
+    * of the corpus entry `dedup_simhash_bucket_audit`.
+    */
   def simhashBucketAudit(df: DataFrame, textCol: String, idCol: String,
       bits: Int = 60, blocks: Int = 4, maxBucket: Int = 1024): DataFrame =
-    simhashHammingPairsAudited(df, textCol, idCol, bits, blocks,
-      maxHamming = math.min(3, blocks - 1), maxBucket = maxBucket)._2
+    simhashBlocked(df, textCol, idCol, bits, blocks)
+      .groupBy("blk", "bval")
+      .agg(count(lit(1)).as("n"))
+      .agg(count(lit(1)).as("n_buckets"),
+        overCap(col("n"), maxBucket, lit(1L)).as("n_dropped_buckets"),
+        overCap(col("n"), maxBucket, col("n")).as("n_dropped_rows"))
+
+  /** Each doc's `bits`-bit simhash `sig`, once per contiguous chunk:
+    * (id, sig, blk, bval), the chunk index and value the pair and audit
+    * buckets key on.
+    */
+  private def simhashBlocked(df: DataFrame, textCol: String, idCol: String,
+      bits: Int, blocks: Int): DataFrame = {
+    require(bits % blocks == 0, "blocks must divide bits")
+    require(bits <= 60, "sign bit must stay clear (hash60 width)")
+    val width = bits / blocks
+    val mask = (1L << width) - 1L
+    df.select(col(idCol).as("id"), simhash(col(textCol), bits).as("sig"))
+      .select(col("id"), col("sig"), posexplode(
+        array((0 until blocks).map(bl =>
+          expr(s"shiftright(sig, ${bl * width}) & $mask")): _*))
+        .as(Seq("blk", "bval")))
+  }
 
   /** Exact n-gram Jaccard similarity for all pairs within `blockCol` blocks
     * — SINGLE-computation relational form: the shingle pipeline (scan,
@@ -519,9 +509,9 @@ object Dedup {
     * `n_docs_emptied` counts docs whose EVERY shingle is hot — such docs
     * emit no pairs at all, the silent-recall-loss case downstream audits
     * must see instead of mistaking it for a clean corpus (the
-    * [[simhashHammingPairsAudited]] discipline). Deterministic,
-    * SQL-replayable, and a separate lazily-planned frame — not an
-    * `observe()` metric, for the AQE-pruning reason documented there.
+    * [[simhashBucketAudit]] discipline). Deterministic, and a standalone
+    * query replayed by the DuckDB twin of the corpus entry
+    * `dedup_shingle_df_audit`.
     */
   def shingleDfAudit(df: DataFrame, textCol: String, idCol: String,
       shingleK: Int, blockCol: Option[Column] = None,
@@ -534,10 +524,8 @@ object Dedup {
     val dfs = sh.groupBy("blk", "sh").agg(count(lit(1)).as("df"))
     val shingleStats = dfs.agg(
       count(lit(1)).as("n_shingles"),
-      coalesce(sum(when(col("df") > maxShingleDf, 1L).otherwise(0L)),
-        lit(0L)).as("n_dropped_shingles"),
-      coalesce(sum(when(col("df") > maxShingleDf, col("df")).otherwise(0L)),
-        lit(0L)).as("n_dropped_postings"))
+      overCap(col("df"), maxShingleDf, lit(1L)).as("n_dropped_shingles"),
+      overCap(col("df"), maxShingleDf, col("df")).as("n_dropped_postings"))
     val docStats = sh
       .withColumn("__df", count(lit(1)).over(W.partitionBy("blk", "sh")))
       .groupBy("blk", "id")
@@ -548,31 +536,6 @@ object Dedup {
           .as("n_docs_emptied"))
     shingleStats.crossJoin(docStats)
   }
-
-  /** [[ngramJaccardPairs]] plus its [[shingleDfAudit]] side frame. */
-  def ngramJaccardPairsAudited(df: DataFrame, textCol: String, idCol: String,
-      shingleK: Int, minJaccard: Double, blockCol: Option[Column] = None,
-      maxShingleDf: Int = 10000): (DataFrame, DataFrame) =
-    (ngramJaccardPairs(df, textCol, idCol, shingleK, minJaccard, blockCol,
-      maxShingleDf),
-      shingleDfAudit(df, textCol, idCol, shingleK, blockCol, maxShingleDf))
-
-  /** [[containmentPairs]] plus its [[shingleDfAudit]] side frame. */
-  def containmentPairsAudited(df: DataFrame, textCol: String, idCol: String,
-      shingleK: Int, minContainment: Double, blockCol: Option[Column] = None,
-      maxShingleDf: Int = 10000): (DataFrame, DataFrame) =
-    (containmentPairs(df, textCol, idCol, shingleK, minContainment, blockCol,
-      maxShingleDf),
-      shingleDfAudit(df, textCol, idCol, shingleK, blockCol, maxShingleDf))
-
-  /** [[jaccardThresholdSweep]] plus its [[shingleDfAudit]] side frame. */
-  def jaccardThresholdSweepAudited(df: DataFrame, textCol: String,
-      idCol: String, shingleK: Int, thresholdsPct: Seq[Long],
-      blockCol: Option[Column] = None,
-      maxShingleDf: Int = 10000): (DataFrame, DataFrame) =
-    (jaccardThresholdSweep(df, textCol, idCol, shingleK, thresholdsPct,
-      blockCol, maxShingleDf),
-      shingleDfAudit(df, textCol, idCol, shingleK, blockCol, maxShingleDf))
 
   /** Shared tail of the exact-shingle pair family: ordered candidate
     * pairs with reduced-set sizes and exact intersection counts —
@@ -757,18 +720,13 @@ object Dedup {
   def clusterNearDups(ids: DataFrame, pairs: DataFrame,
       idCol: String = "id", maxIters: Int = 50): DataFrame = {
     // Canonical child>parent orientation; self-loops and duplicates out.
-    val edgeObs = org.apache.spark.sql.Observation()
-    val edges = pairs
+    val counted = Counters.pinned(pairs
       .select(col("id_a"), col("id_b")).where(col("id_a") =!= col("id_b"))
       .select(greatest(col("id_a"), col("id_b")).as("a"),
         least(col("id_a"), col("id_b")).as("b"))
-      .distinct()
-      .observe(edgeObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    // AQE can prune the CollectMetrics node of an empty edge set; the
-    // empty map then means 0 edges (and the collect below checks it).
-    val nEdges = org.apache.spark.sql.graftbridge.GraftBridge
-      .observationOrEmpty(edgeObs).getOrElse("n", 0L).asInstanceOf[Long]
+      .distinct(), count(lit(1)).as("n"))
+    val edges = counted.on
+    lazy val nEdges = counted("n")
     val threshold =
       ids.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     val stars = edges.schema("a").dataType match {
@@ -853,10 +811,7 @@ object Dedup {
     // r14: the signature rides the round's checkpoint materialization as
     // an observe() metric (CollectMetrics accumulators collected by the
     // checkpoint's own action) instead of a separate agg job per round —
-    // one job per round, not two. AQE's empty-relation propagation can
-    // prune the CollectMetrics node when the edge set is empty; the
-    // empty-map fallback maps that to (0, 0), which IS the empty
-    // multiset's signature.
+    // one job per round, not two.
     def withHash(e: DataFrame): DataFrame =
       e.withColumn("h",
         StableHash.hash60(concat_ws(":", col("a"), col("b"))))
@@ -885,18 +840,12 @@ object Dedup {
         .unionByName(nm1.where(col("v") =!= col("m"))
           .select(col("v").as("a"), col("m").as("b")))
         .distinct()
-      val obs = org.apache.spark.sql.Observation()
-      edges = withHash(small)
-        .observe(obs, count(lit(1)).as("n"),
-          expr("coalesce(bit_xor(h), 0L)").as("x"))
-        .localCheckpoint(true)
-      val m = org.apache.spark.sql.graftbridge.GraftBridge
-        .observationOrEmpty(obs)
-      val sig = (m.getOrElse("n", 0L).asInstanceOf[Long],
-        m.getOrElse("x", 0L).asInstanceOf[Long])
+      val round = Counters.pinned(withHash(small), count(lit(1)).as("n"),
+        expr("coalesce(bit_xor(h), 0L)").as("x"))
+      val sig = (round("n"), round("x"))
       converged = prevSig.contains(sig)
       prevSig = Some(sig)
-      edges = edges.drop("h")
+      edges = round.on.drop("h")
       i += 1
     }
     // Exhausting maxIters before the star fixed point would make the final
@@ -1130,7 +1079,8 @@ object Dedup {
     * gram strings whose window-occurrence count exceeds the cap (they
     * stop marking spans); `n_dropped_windows` the window occurrences
     * suppressed with them. Same no-silent-caps contract as
-    * [[shingleDfAudit]].
+    * [[shingleDfAudit]]: a standalone query, replayed by the DuckDB twin
+    * of the corpus entry `dedup_passage_gram_audit`.
     */
   def passageGramAudit(df: DataFrame, textCol: String, idCol: String,
       k: Int, maxGramDf: Int = 10000): DataFrame = {
@@ -1142,10 +1092,8 @@ object Dedup {
       .agg(count(lit(1)).as("n_grams"),
         coalesce(sum(when(col("occ") >= 2, 1L).otherwise(0L)), lit(0L))
           .as("n_duplicated_grams"),
-        coalesce(sum(when(col("occ") > maxGramDf, 1L).otherwise(0L)),
-          lit(0L)).as("n_dropped_grams"),
-        coalesce(sum(when(col("occ") > maxGramDf, col("occ")).otherwise(0L)),
-          lit(0L)).as("n_dropped_windows"),
+        overCap(col("occ"), maxGramDf, lit(1L)).as("n_dropped_grams"),
+        overCap(col("occ"), maxGramDf, col("occ")).as("n_dropped_windows"),
         // hash60-key collision check for [[duplicatedPassages]]' 8-byte
         // gram keys: distinct gram STRINGS minus distinct hash60 keys.
         // Non-zero means the capped pipeline merged two grams' counts —
@@ -1156,13 +1104,6 @@ object Dedup {
           countDistinct(StableHash.hash60(col("gram"))))
           .as("n_hash_collisions"))
   }
-
-  /** [[duplicatedPassages]] plus its [[passageGramAudit]] side frame. */
-  def duplicatedPassagesAudited(df: DataFrame, textCol: String,
-      idCol: String, k: Int,
-      maxGramDf: Int = 10000): (DataFrame, DataFrame) =
-    (duplicatedPassages(df, textCol, idCol, k, maxGramDf),
-      passageGramAudit(df, textCol, idCol, k, maxGramDf))
 
   /** Recall-loss audit for [[sortedNeighborhood]]'s window bound: ONE row
     * `(n_blocks, n_rows, n_pairs_possible, n_pairs_generated,

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.functions.{StableHash, Text}
 
 /** Corpus-level text analysis: one narrow (shuffle-free) pass deriving
@@ -37,7 +38,8 @@ object TextAnalysis {
   }
 
   /** Corpus rollup by predicted language (one shuffle on the tiny lang key,
-    * partial aggregation map-side).
+    * partial aggregation map-side). `avg_quality` is the decimal-exact
+    * mean, so it replays bit-for-bit in the oracle.
     */
   def languageSummary(docs: DataFrame, textCol: String = "text"): DataFrame =
     profile(docs, textCol)
@@ -45,7 +47,8 @@ object TextAnalysis {
       .agg(
         count(lit(1)).as("n_docs"),
         sum("n_tokens").as("total_tokens"),
-        avg("quality_score").as("avg_quality"))
+        (sum(col("quality_score").cast(DecimalType(18, 6))).cast("double") /
+          count(lit(1))).as("avg_quality"))
 
   /** Relational twin of [[graft.functions.Text.repetitionFromParts]]:
     * identical outputs (spec-asserted equality), different complexity

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import graft.core.Counters
 import graft.metrics.StaffingMetrics
 import graft.metrics.StaffingMetrics.{DropAudit, JoinAudit}
 
@@ -47,9 +48,8 @@ object MetricsPipeline {
     spark.sparkContext.setLogLevel("WARN")
     val (out, audit, drops) = run(spark, csvDir)
     // K5 publish (calculate_metrics.py:172); the row count rides the write
-    val written = Observation()
-    out.observe(written, count(lit(1)).as("rows"))
-      .coalesce(1).write.mode("overwrite").option("header", "true").csv(outDir)
+    val written = Counters(out.toDF, count(lit(1)).as("rows"))
+    written.on.coalesce(1).write.mode("overwrite").option("header", "true").csv(outDir)
     // the audits fill in on the write: the reference's empty-merge
     // (calculate_metrics.py:167-169) and per-stage drop warnings (:93-153)
     audit.emptyAfterStep.foreach(i =>
@@ -62,7 +62,7 @@ object MetricsPipeline {
       s"[metrics] warning: zeroed denominators on ${drops.zeroDenomRows} aggregated rows")
     if (drops.droppedRatioRows > 0) System.err.println(
       s"[metrics] warning: dropped ${drops.droppedRatioRows} aggregated rows for null ratios")
-    println(s"[metrics] wrote ${written.get("rows")} rows to $outDir")
+    println(s"[metrics] wrote ${written("rows")} rows to $outDir")
     spark.stop()
   }
 }

@@ -90,14 +90,7 @@ private[graft] trait QueriesText { this: SparkEntry.type =>
 
     // Corpus rollup by predicted language (decimal-exact avg).
     "text_lang_summary" -> ((s, d) =>
-      TextAnalysis.profile(t(s, d, "documents"))
-        .groupBy("lang_pred")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum("n_tokens").as("total_tokens"),
-          (sum(col("quality_score").cast(DecimalType(18, 6))).cast("double") /
-            count(lit(1))).as("avg_quality"))
-        .orderBy("lang_pred")),
+      TextAnalysis.languageSummary(t(s, d, "documents")).orderBy("lang_pred")),
 
     // Inverted index: per-term df / total tf / delta-encoded "gap:tf"
     // posting list, bounded to the 50 highest-df terms (deterministic

@@ -1,15 +1,12 @@
 package graft.tools
 
 import java.lang.management.ManagementFactory
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-import org.apache.spark.sql.graftbridge.GraftBridge
 
-import graft.core.Graft
+import graft.core.{Graft, Jobs}
 
 /** The dev timing harness: times corpus queries and fused bench forms side
   * by side in one session, splits every pass into build, plan and execute
@@ -26,8 +23,9 @@ import graft.core.Graft
   * (A B, then B A, …) and every pass builds a fresh plan and runs Bench's
   * action, `queryExecution.toRdd.count()`. `build_s` is the builder call,
   * eager-pin jobs included; `plan_s` is `executedPlan`; `cpu_s` is the
-  * process CPU delta, which in local mode covers the executors. A listener
-  * counts the Spark jobs of each pass (not divided by the instance count):
+  * process CPU delta, which in local mode covers the executors.
+  * [[graft.core.Jobs.during]] counts the Spark jobs of each pass (not
+  * divided by the instance count):
   * `build_jobs` ran inside the builder call (parquet schema reads, eager
   * pins), `jobs` ran from planning to the end of the action (one per AQE
   * stage, sampling jobs included), so `jobs` is what the query's plan
@@ -111,43 +109,24 @@ object Probe {
   private val os = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
-  /** The local property that tags a pass's jobs with its phase. */
-  private val Phase = "graft.probe.phase"
-
-  /** Counts job starts per phase; read only after
-    * `GraftBridge.drainListeners`, since listener events arrive
-    * asynchronously.
-    */
-  private final class JobCounter extends SparkListener {
-    val build, run = new AtomicInteger(0)
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).map(_.getProperty(Phase)) match {
-        case Some("build") => build.incrementAndGet(): Unit
-        case Some("run") => run.incrementAndGet(): Unit
-        case _ =>
-      }
-  }
-
-  private def timed(spark: SparkSession, dir: String, t: Target,
-      counter: JobCounter): (Pass, DataFrame) = {
-    val sc = spark.sparkContext
-    GraftBridge.drainListeners(sc)
-    counter.build.set(0)
-    counter.run.set(0)
-    sc.setLocalProperty(Phase, "build")
-    val c0 = os.getProcessCpuTime
-    val t0 = System.nanoTime()
-    val df = try t.build(spark, dir) finally sc.setLocalProperty(Phase, "run")
-    val t1 = System.nanoTime()
-    df.queryExecution.executedPlan
-    val t2 = System.nanoTime()
-    try df.queryExecution.toRdd.count() finally sc.setLocalProperty(Phase, null)
-    val t3 = System.nanoTime()
-    val cpu = os.getProcessCpuTime - c0
-    GraftBridge.drainListeners(sc)
+  private def timed(spark: SparkSession, dir: String,
+      t: Target): (Pass, DataFrame) = {
+    val ((df, c0, build), buildJobs) = Jobs.during(spark) {
+      val c0 = os.getProcessCpuTime
+      val t0 = System.nanoTime()
+      val d = t.build(spark, dir)
+      (d, c0, System.nanoTime() - t0)
+    }
+    val ((plan, exec, cpu), jobs) = Jobs.during(spark) {
+      val t1 = System.nanoTime()
+      df.queryExecution.executedPlan
+      val t2 = System.nanoTime()
+      df.queryExecution.toRdd.count()
+      (t2 - t1, System.nanoTime() - t2, os.getProcessCpuTime - c0)
+    }
     def s(ns: Long): Double = ns / 1e9 / t.instances
-    (Pass(s(t1 - t0), s(t2 - t1), s(t3 - t2), s(t3 - t0), s(cpu),
-      counter.build.get, counter.run.get), df)
+    (Pass(s(build), s(plan), s(exec), s(build + plan + exec), s(cpu),
+      buildJobs, jobs), df)
   }
 
   def measure(spark: SparkSession, dir: String, warmDir: String,
@@ -156,12 +135,10 @@ object Probe {
     val ts = targets.map(resolve)
     ts.foreach(_.build(spark, warmDir).queryExecution.toRdd.count())
     val load = os.getSystemLoadAverage
-    val counter = new JobCounter
-    spark.sparkContext.addSparkListener(counter)
-    val runs = try (0 until passes).flatMap { i =>
+    val runs = (0 until passes).flatMap { i =>
       val order = ts.indices.drop(i % ts.size) ++ ts.indices.take(i % ts.size)
-      order.map(j => j -> timed(spark, dir, ts(j), counter))
-    } finally spark.sparkContext.removeSparkListener(counter)
+      order.map(j => j -> timed(spark, dir, ts(j)))
+    }
     val byTarget = ts.indices.map(j => runs.filter(_._1 == j).map(_._2))
     val lastDf = byTarget.map(_.last._2)
     val results = ts.indices.map(j => Result(ts(j).name, ts(j).instances,

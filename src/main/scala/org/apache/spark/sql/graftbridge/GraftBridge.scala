@@ -27,19 +27,4 @@ object GraftBridge {
     */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
-
-  /** Non-blocking read of an [[org.apache.spark.sql.Observation]]
-    * (`getOrEmpty` minus its `private[sql]` wait): empty map until the
-    * first action on the observed frame completes. AQE's empty-relation
-    * propagation can prune a CollectMetrics node out of the executed
-    * plan entirely, in which case Spark delivers the schema-less
-    * `Row.empty` — surfaced here as the empty map, not an NPE.
-    */
-  def observationOrEmpty(
-      o: org.apache.spark.sql.Observation): Map[String, Any] =
-    o.getRowOrEmpty match {
-      case Some(r) if r.schema != null =>
-        r.schema.fieldNames.zip(r.toSeq).toMap
-      case _ => Map.empty
-    }
 }

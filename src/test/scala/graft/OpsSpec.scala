@@ -1224,35 +1224,14 @@ class OpsSpec extends SparkSpec {
     // Spark 4.1); a plain `<` would not catch them, since threshold -1
     // also trades broadcast joins for sort-merge joins, which alone adds
     // a couple of shuffle jobs.
-    val sc = spark.sparkContext
-    def jobs(body: => Unit): Int = {
-      val group = s"graft-job-count-${System.nanoTime()}"
-      val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (js.properties != null &&
-              js.properties.getProperty("spark.jobGroup.id") == group)
-            n.incrementAndGet(): Unit
-      }
-      sc.addSparkListener(l)
-      sc.setJobGroup(group, "clusterNearDups job count")
-      try body
-      finally {
-        sc.clearJobGroup()
-        Thread.sleep(1000) // async listener settle
-        sc.removeSparkListener(l)
-      }
-      n.get()
-    }
     def run(): Unit = {
       val kept = Dedup.fuzzyDedup(docs, "text", "doc_id",
         numHashes = 16, bands = 8, shingleK = 3, threshold = 0.5)
         .select("doc_id").as[Long].collect().sorted
       assert(kept.toSeq == Seq(1L, 4L, 5L))
     }
-    val driver = jobs(run())
-    val loop = jobs(onStarLoop(run()))
+    val driver = jobsDuring(run())
+    val loop = jobsDuring(onStarLoop(run()))
     info(s"fuzzyDedup jobs: driver path $driver, star loop $loop")
     assert(2 * driver <= loop, s"driver path ran $driver jobs, star loop $loop")
   }
@@ -1839,8 +1818,10 @@ class OpsSpec extends SparkSpec {
       .unionByName(Seq(
         (10L, "alpha beta gamma delta"),
         (11L, "alpha beta gamma epsilon")).toDF("doc_id", "text"))
-    val (pairs, audit) = Dedup.ngramJaccardPairsAudited(docs, "text",
-      "doc_id", shingleK = 2, minJaccard = 0.3, maxShingleDf = 4)
+    val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id",
+      shingleK = 2, minJaccard = 0.3, maxShingleDf = 4)
+    val audit = Dedup.shingleDfAudit(docs, "text", "doc_id",
+      shingleK = 2, maxShingleDf = 4)
     val a = audit.collect().head
     // 3 hot bigrams dropped (df 5 each -> 15 postings); the 5 hot docs
     // have no surviving shingles
@@ -1995,8 +1976,10 @@ class OpsSpec extends SparkSpec {
     // out, and the audit must say why
     val docs = (0 until 5).map(i => (i.toLong, "same words every time"))
       .toDF("doc_id", "text")
-    val (pairs, audit) = Dedup.simhashHammingPairsAudited(docs, "text",
-      "doc_id", bits = 60, blocks = 4, maxHamming = 3, maxBucket = 4)
+    val pairs = Dedup.simhashHammingPairs(docs, "text", "doc_id",
+      bits = 60, blocks = 4, maxHamming = 3, maxBucket = 4)
+    val audit = Dedup.simhashBucketAudit(docs, "text", "doc_id",
+      bits = 60, blocks = 4, maxBucket = 4)
     assert(pairs.count() == 0L)
     val a = audit.collect().head
     assert(a.getAs[Long]("n_buckets") == 4L) // one (hot) bucket per chunk
@@ -2006,8 +1989,8 @@ class OpsSpec extends SparkSpec {
     val distinctDocs = (0 until 6)
       .map(i => (i.toLong, s"doc number $i entirely unlike others $i$i"))
       .toDF("doc_id", "text")
-    val (_, a2) = Dedup.simhashHammingPairsAudited(distinctDocs, "text",
-      "doc_id", bits = 60, blocks = 4, maxHamming = 3, maxBucket = 1024)
+    val a2 = Dedup.simhashBucketAudit(distinctDocs, "text", "doc_id",
+      bits = 60, blocks = 4, maxBucket = 1024)
     val r2 = a2.collect().head
     assert(r2.getAs[Long]("n_dropped_buckets") == 0L)
     assert(r2.getAs[Long]("n_dropped_rows") == 0L)

@@ -146,26 +146,16 @@ class PlanShapeSpec extends SparkSpec {
     // query-side collect right here), and the physical plan must carry
     // the block cogroup over two lazy parquet scans plus the bounded
     // TopKAggMerge finisher — no Window, no corpus sort.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
     // Table reads stay OUTSIDE the window: a cold spark.read.parquet can
     // fire a driver schema-read job that has nothing to do with the
     // operator under test.
     val emb = graft.core.Graft.table(spark, sf, "embeddings")
-    spark.sparkContext.addSparkListener(l)
-    val df = try {
+    val jobs = jobsDuring {
       val d = graft.ops.Similarity.knnJoin(emb, emb, k = 3, nBlocks = 4)
       d.queryExecution.executedPlan // force full planning
-      Thread.sleep(500) // async listener settle
-      d
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 0,
-      s"planning knnJoin launched ${jobs.get()} job(s) — a side was collected")
+    }
+    assert(jobs == 0,
+      s"planning knnJoin launched $jobs job(s) — a side was collected")
     val p = SparkEntry.queries("sim_knn_join")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("CoGroup"), p.take(600))
@@ -182,23 +172,14 @@ class PlanShapeSpec extends SparkSpec {
     // scoring kernel (the knnJoin tail) — no broadcast of a data-sized
     // side, no per-candidate row join, no Window. Only the bounded
     // centroid frame broadcasts.
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
     val emb = graft.core.Graft.table(spark, sf, "embeddings")
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = jobsDuring {
       val d = graft.ops.Similarity.knnJoinIvf(emb, emb, k = 3,
         nCells = 16, nProbe = 2)
       d.queryExecution.executedPlan // force full planning
-      Thread.sleep(500) // async listener settle
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 0,
-      s"planning knnJoinIvf launched ${jobs.get()} job(s) — a side was collected")
+    }
+    assert(jobs == 0,
+      s"planning knnJoinIvf launched $jobs job(s) — a side was collected")
     val p = SparkEntry.queries("sim_knn_join_ivf")(spark, sf)
       .queryExecution.executedPlan.toString
     assert(p.contains("CoGroup"), p.take(800))
@@ -286,22 +267,13 @@ class PlanShapeSpec extends SparkSpec {
       .select(org.apache.spark.sql.functions.col("doc_id"),
         org.apache.spark.sql.functions.md5(
           org.apache.spark.sql.functions.col("text")).as("digest"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = jobsDuring {
       val d = graft.ops.BloomDedup.newRowsWithSketches(
         incoming, seen, "digest", sketches)
       d.queryExecution.executedPlan // force full planning
-      Thread.sleep(500) // async listener settle
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 0,
-      s"planning the persisted-sketch probe launched ${jobs.get()} job(s) — " +
+    }
+    assert(jobs == 0,
+      s"planning the persisted-sketch probe launched $jobs job(s) — " +
         "the resume path must not rebuild the filter from the corpus")
     // and the persisted route is exact: equals the plain anti-join
     val got = graft.ops.BloomDedup.newRowsWithSketches(
@@ -613,23 +585,14 @@ class PlanShapeSpec extends SparkSpec {
       s"$dir/centroids")
     val cents = graft.ops.AnnIndex.loadIvfCentroids(spark, s"$dir/centroids")
     cents.queryExecution.executedPlan // absorb the one-off schema read
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = jobsDuring {
       val d = graft.ops.Similarity.ivfTopKWithCentroids(emb,
         emb.where(org.apache.spark.sql.functions.col("vec_id") < 5),
         cents, k = 10, nProbe = 2)
       d.queryExecution.executedPlan // force full planning
-      Thread.sleep(500) // async listener settle
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 0,
-      s"planning the persisted-IVF probe launched ${jobs.get()} job(s) — " +
+    }
+    assert(jobs == 0,
+      s"planning the persisted-IVF probe launched $jobs job(s) — " +
         "the serve path must not retrain or collect")
     // and the probe result matches the inline-trained run bit-for-bit
     val served = graft.ops.Similarity.ivfTopKWithCentroids(emb,
@@ -654,22 +617,13 @@ class PlanShapeSpec extends SparkSpec {
       s"$dir/centroids")
     val cents = graft.ops.AnnIndex.loadIvfCentroids(spark, s"$dir/centroids")
     cents.queryExecution.executedPlan // absorb the one-off schema read
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val jobs = jobsDuring {
       val d = graft.ops.Similarity.knnJoinIvfWithCentroids(emb, emb,
         cents, k = 3, nProbe = 2)
       d.queryExecution.executedPlan // force full planning
-      Thread.sleep(500) // async listener settle
-    } finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() == 0,
-      s"planning the persisted-IVF kNN join launched ${jobs.get()} job(s) — " +
+    }
+    assert(jobs == 0,
+      s"planning the persisted-IVF kNN join launched $jobs job(s) — " +
         "the serve path must not retrain or collect")
     // and the served join matches the inline-trained join bit-for-bit
     val served = graft.ops.Similarity.knnJoinIvfWithCentroids(emb, emb,

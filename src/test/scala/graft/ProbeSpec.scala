@@ -5,7 +5,8 @@ import graft.tools.Probe
 /** The dev timing harness at the smoke scale, one pass: its shuffle count
   * walks the final adaptive plan, its job count covers the pass, its
   * parity check compares only targets that share a schema, and a bad
-  * target name fails before any job.
+  * target name fails before any job. Also the job counter it uses and
+  * Explain's normalized plan text.
   */
 class ProbeSpec extends SparkSpec {
 
@@ -32,6 +33,19 @@ class ProbeSpec extends SparkSpec {
     assert(byName("f6_distinct").buildJobs == 1)
   }
 
+  test("Jobs.during nests, and the jobs keep the caller's job group") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-outer", "outer")
+    try {
+      val ((inner, group), outer) = graft.core.Jobs.during(spark) {
+        spark.range(3).collect()
+        val (_, n) = graft.core.Jobs.during(spark)(spark.range(3).collect())
+        (n, sc.getLocalProperty("spark.jobGroup.id"))
+      }
+      assert(inner > 0 && outer == 2 * inner && group == "graft-outer")
+    } finally sc.clearJobGroup()
+  }
+
   test("a target against itself reports parity ok") {
     val r = measure("q1_agg", "q1_agg")
     assert(r.parity == "ok")
@@ -45,22 +59,25 @@ class ProbeSpec extends SparkSpec {
       Seq(1, Bench.headline.toMap.apply("q1_agg")))
   }
 
-  test("an unknown target fails with the named error and runs no Spark job") {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
+  test("Explain's opt: text of one plan built twice is identical, observe() included") {
+    import org.apache.spark.sql.functions.{count, lit}
+    def opt(): String = {
+      val c = graft.core.Counters(spark.range(10).toDF("id").where("id > 3"),
+        count(lit(1)).as("n"))
+      graft.tools.Explain.normalize(
+        c.on.groupBy("id").count().queryExecution.optimizedPlan.toString)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (a, b) = (opt(), opt())
+    assert(a.contains("CollectMetrics <uuid>"), a)
+    assert(a == b)
+  }
+
+  test("an unknown target fails with the named error and runs no Spark job") {
+    assert(jobsDuring {
       val e = intercept[Probe.UnknownTarget](
         measure("q1_agg", "fused:no_such_query"))
       assert(e.getMessage.contains("fused:no_such_query"))
       intercept[Probe.UnknownTarget](measure("no_such_query"))
-      Thread.sleep(500) // listener events arrive asynchronously
-    } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get() == 0)
+    } == 0)
   }
 }

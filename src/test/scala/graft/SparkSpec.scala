@@ -10,30 +10,8 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sql(q: String) = spark.sql(q)
 
-  /** Spark jobs `body` runs, counted in its own job group after the
-    * listener bus has delivered every event posted so far.
-    */
-  def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"graft-test-jobs-${System.nanoTime()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null &&
-            js.properties.getProperty("spark.jobGroup.id") == group)
-          n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(l)
-    sc.setJobGroup(group, "job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      org.apache.spark.sql.graftbridge.GraftBridge.drainListeners(sc)
-      sc.removeSparkListener(l)
-    }
-    n.get()
-  }
+  /** Spark jobs `body` runs, counted by [[graft.core.Jobs.during]]. */
+  def jobsDuring(body: => Unit): Int = graft.core.Jobs.during(spark)(body)._2
 }
 
 object SparkSpec {
